@@ -44,7 +44,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # Convex CCW gate polygons over (c_acctbal, c_nationkey) — ONE source
 # of truth for the gate query, the oracle's half-plane inequalities,
-# bench.py, and the plan tests. Geometry invariant: every edge keeps
+# and the plan tests. Geometry invariant: every edge keeps
 # |cross| >= 0.005 from every representable data-lattice point
 # (verified over the full lattice), so the SQL half-plane and numpy
 # ray-cast formulations agree exactly.

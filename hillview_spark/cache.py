@@ -8,7 +8,7 @@ resident analytics service answering many queries would otherwise
 accumulate those cached partitions until storage eviction. Every
 internal persist therefore goes through :func:`persist`, which
 registers the DataFrame in the ACTIVE registry so the owning loop
-(bench.py, the oracle gate, an API server's per-request teardown) can
+(perfbench, the oracle gate, an API server's per-request teardown) can
 call :func:`release_all` once results are materialized.
 
 Scoping: the registry is a ``contextvars.ContextVar``, so concurrent

@@ -480,7 +480,7 @@ def simhash(
     (groupBy(doc, h).count() then count-weighted bit sums — pure
     Tungsten both levels, no HOF) was also ~20% slower on a clean
     box (interleaved medians 2.457 vs 2.056 s, fingerprints
-    identical, tools/ab_simhash_r15.py variant d): the extra
+    identical, recorded in OPTIMIZATION_r15.md): the extra
     shuffle of distinct (doc, h, c) rows outweighs the saved
     60-buffer updates at this corpus's 2.3x dup factor. A corpus
     with a far higher dup factor would flip that trade; at 2-3x the
@@ -494,7 +494,7 @@ def simhash(
     ~17% win that CANNOT ship: the fingerprints change, the oracle
     pins the md5-derived 60-bit hash (DuckDB has no xxhash64), and
     a changed declared result is a regression regardless of speed.
-    Recorded in tools/ab_r16.py simhash_hash as the documented delta
+    Recorded in OPTIMIZATION_r16.md as the documented delta
     for a deployment free to re-declare its hash function."""
     toks = df.select(
         F.col(id_col).alias("doc"),

@@ -46,7 +46,7 @@ def _count_re(col: Column, pattern: str) -> Column:
     # size of the document). Measured (r16, closing the r15 scale
     # claim): NEUTRAL even on ~18 KB documents — 3.455 s vs 3.468 s
     # interleaved medians of 7 on a 2000-doc x 60-repeat fixture
-    # (tools/ab_r16.py regexp_big, identity asserted) — the regex
+    # (OPTIMIZATION_r16.md, identity asserted) — the regex
     # walk dominates and the skipped array allocation is noise at
     # any document size tested. Kept for the allocation-free form,
     # not a measured win.

@@ -24,11 +24,6 @@ from hillview_spark import cache, numeric
 from hillview_spark.operators.histogram import _finite as _hist_finite
 
 
-# moved to hillview_spark.cache (r9) so every localCheckpoint site
-# shares one releasable-handle implementation
-_LocalCheckpointHandle = cache.LocalCheckpointHandle
-
-
 def row_count(df: DataFrame) -> DataFrame:
     return df.agg(F.count(F.lit(1)).alias("row_count"))
 
@@ -54,7 +49,6 @@ def basic_col_stats(
     cols: list[str],
     ndigits: int = 4,
     exact: bool = True,
-    widths: dict[str, tuple[int, int]] | None = None,
 ) -> DataFrame:
     """BasicColStatSketch: one output row per column with presence,
     missing, min, max, sum, mean, stddev (sample). Computed as a
@@ -78,18 +72,6 @@ def basic_col_stats(
     moment-formula cancellation costs relative precision (~1e-3 at
     mean/sd ~ 10^7) — sums and means stay exact regardless.
 
-    widths: optional per-column (precision, scale) for the exact
-    path's decimal OPERANDS, the same domain-fitting trick as
-    tpch._DEC_WIDTHS: when the caller pins a column's true value
-    domain (e.g. (8,2) for 2-decimal money < 10^6), the per-row
-    cast/multiply chain stays on Spark's compact-long decimal path
-    instead of 128-bit BigDecimal — measured 1.73s -> 0.98s
-    same-process for four lineitem columns at sf0.1, bit-identical
-    results (sums of 2-decimal data are exact at any scale >= 2).
-    Values outside the declared domain FAIL LOUDLY under ANSI mode
-    rather than silently truncating. Columns absent from the dict
-    fall back to the wide default.
-
     exact=False is the REFERENCE's own semantics — BasicColStatSketch
     (BasicColStatSketch.java:31) accumulates plain doubles — and the
     throughput path: ~9x faster at sf0.1 (0.16s vs 1.50s, four
@@ -109,10 +91,7 @@ def basic_col_stats(
     fin = numeric.finite_values(df, cols)
     for c in cols:
         vc = fin[c]
-        if exact and widths and c in widths:
-            p, ws = widths[c]
-            dec = dsq = vc.cast(f"decimal({p},{ws})")
-        elif exact:
+        if exact:
             dec = vc.cast(f"decimal(28,{scale})")
             dsq = vc.cast(f"decimal(18,{scale})")
         else:
@@ -329,7 +308,7 @@ def global_rank(
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
-    cache.track(_LocalCheckpointHandle(tagged))
+    cache.track(cache.LocalCheckpointHandle(tagged))
     woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         tagged.groupBy("__pid")

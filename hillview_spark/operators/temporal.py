@@ -247,13 +247,6 @@ def range_join(
     return joined.drop("__bucket")
 
 
-def _fin_val(df, col: str):
-    """FINITE value or NULL (the engine-wide numeric rule,
-    hillview_spark.numeric): a NaN/±Inf reading must not poison — or,
-    on the DECIMAL cast, job-kill — a rolling sum; it is missing."""
-    return numeric.finite_value(df, col)
-
-
 def moving_aggregate(
     events: DataFrame,
     key_col: str = "user_id",
@@ -305,7 +298,9 @@ def moving_aggregate(
             .orderBy(F.col(ts_col), F.col(tiebreak_col))
             .rowsBetween(-n_preceding, 0)
         )
-        dec_v = _fin_val(events, value_col).cast("decimal(18,6)")
+        # NaN/±Inf readings are missing (hillview_spark.numeric): they
+        # must not poison — or, on the DECIMAL cast, job-kill — a sum
+        dec_v = numeric.finite_value(events, value_col).cast("decimal(18,6)")
         return events.select(
             F.col(key_col),
             F.col(tiebreak_col),
@@ -384,7 +379,7 @@ def moving_aggregate(
         .orderBy(F.col(ts_col), F.col(tiebreak_col))
         .rowsBetween(-n_preceding, 0)
     )
-    dec_v = _fin_val(u, value_col).cast("decimal(18,6)")
+    dec_v = numeric.finite_value(u, value_col).cast("decimal(18,6)")
     return (
         u.select(
             F.col(key_col),

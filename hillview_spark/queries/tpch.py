@@ -1,6 +1,6 @@
 """TPC-H-shaped analytical benchmark queries over the synthetic star
-schema. These anchor bench.py against BASELINE and exercise the
-join/agg machinery at scale.
+schema. These anchor the report benchmark (perfbench/) and exercise
+the join/agg machinery at scale.
 
 Scale notes (100 TB): every query filters the fact table *before*
 joining (predicate pushdown to the parquet scan), joins dimensions
@@ -287,7 +287,7 @@ def q15_top_supplier(lineitem: DataFrame, supplier: DataFrame) -> DataFrame:
     # interleaved; re-measured r16: 0.433 vs 0.407 medians of 9 —
     # materialization + cache bookkeeping cost more than the
     # page-cached rescan saves) and only NEUTRAL on a 10x lineitem
-    # replica (r16 tools/ab_r16.py q15_10x: 0.272 vs 0.283 medians
+    # replica (OPTIMIZATION_r16.md: 0.272 vs 0.283 medians
     # of 7), so the rescan ships. At 100 TB with cold storage the
     # trade flips — the persist variant is the probe's persisted()
     # factory, one pushdown-pruned quarter scan instead of two.

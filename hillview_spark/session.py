@@ -16,12 +16,12 @@ from pyspark.sql import SparkSession
 # settings whose local values would be wrong on a real cluster,
 # promoted from OPTIMIZATION_r15 prose into code. Select with
 # get_spark(profile="production") or SPARK_GRAFT_PROFILE=production.
-# The default "local" profile adds NOTHING — the driver bench runs
-# the exact same session confs as every previous round.
+# The default "local" profile adds NOTHING — benchmark numbers stay
+# comparable with those recorded in OPTIMIZATION_r15/r16.md.
 PROFILES: dict[str, dict[str, str]] = {
     "local": {},
     "production": {
-        # Measured r15 (tools/ab_aqe_r15.py, interleaved): respect
+        # Measured r15 (OPTIMIZATION_r15.md, interleaved): respect
         # the advisory partition size instead of preserving
         # parallelism. At 100 TB every shuffle exceeds the target,
         # so coalescing only removes empty-task overhead; locally

@@ -42,14 +42,6 @@ def _event_time_stream(
     return stream
 
 
-def _fin_value(df: DataFrame, col: str = "value"):
-    """FINITE value or NULL for the decimal value sums (the
-    engine-wide numeric rule, hillview_spark.numeric): NaN/±Inf
-    readings are missing — the DECIMAL cast would otherwise be
-    job-fatal under ANSI and crash the DuckDB oracle outright."""
-    return numeric.finite_value(df, col)
-
-
 def windowed_counts(events: DataFrame, unit: str = "hour") -> DataFrame:
     """Tumbling-window event counts and value sums per event type.
     events.value is exact to 6 decimals → DECIMAL sum is lossless and
@@ -63,7 +55,9 @@ def windowed_counts(events: DataFrame, unit: str = "hour") -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(_fin_value(events).cast("decimal(18,6)"))
+            # NaN/±Inf readings are missing (hillview_spark.numeric):
+            # the DECIMAL cast would otherwise be job-fatal under ANSI
+            F.sum(numeric.finite_value(events, "value").cast("decimal(18,6)"))
             .cast("double").alias("sum_value"),
         )
     )
@@ -2344,7 +2338,8 @@ def sliding_window_counts(
         events.groupBy(w.alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(_fin_value(events).cast("decimal(18,6)")).cast("double")
+            F.sum(numeric.finite_value(events, "value").cast("decimal(18,6)"))
+            .cast("double")
             .alias("sum_value"),
         )
         .select(F.col("win.start").alias("window_start"),

@@ -953,20 +953,26 @@ def test_pii_scrub_url_not_double_counted_as_email(spark):
 def test_repetition_stats_known_values(spark):
     from hillview_spark.functions import curation
 
-    df = spark.createDataFrame(
-        [(1, "a a a b"), (2, "x y z w"), (3, "go go go go")],
-        "doc_id long, text string",
+    # (doc_id, text) -> (n_tokens, distinct_tokens, dup_token_frac,
+    # top_token_frac, top_bigram_frac)
+    expected = {
+        # 4 tokens, 2 distinct; top token 'a' 3/4; top bigram 'a a' 2*2/4
+        (1, "a a a b"): (4, 2, 0.5, 0.75, 1.0),
+        # all distinct
+        (2, "x y z w"): (4, 4, 0.0, 0.25, 0.5),
+        # degenerate repetition maxes the signals
+        (3, "go go go go"): (4, 1, 0.75, 1.0, 1.0),
+        # reuses doc 1's id: scored on its own text, not merged with
+        # doc 1's (the per-row precondition repetition_stats documents)
+        (1, "p q r p"): (4, 3, 0.25, 0.5, 0.5),
+    }
+    df = spark.createDataFrame(list(expected), "doc_id long, text string")
+    got = sorted(
+        (r.doc_id, r.n_tokens, r.distinct_tokens, r.dup_token_frac,
+         r.top_token_frac, r.top_bigram_frac)
+        for r in curation.repetition_stats(df).collect()
     )
-    out = {r.doc_id: r for r in curation.repetition_stats(df).collect()}
-    # doc 1: 4 tokens, 2 distinct; top token 'a' 3/4; top bigram 'a a' 2*2/4
-    assert out[1].n_tokens == 4 and out[1].distinct_tokens == 2
-    assert out[1].dup_token_frac == 0.5
-    assert out[1].top_token_frac == 0.75
-    assert out[1].top_bigram_frac == 1.0
-    # doc 2: all distinct
-    assert out[2].dup_token_frac == 0.0 and out[2].top_bigram_frac == 0.5
-    # doc 3: degenerate repetition maxes the signals
-    assert out[3].dup_token_frac == 0.75 and out[3].top_token_frac == 1.0
+    assert got == sorted((d, *v) for (d, _), v in expected.items())
 
 
 def test_decontaminate_removes_ngram_overlap(spark):

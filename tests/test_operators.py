@@ -1294,20 +1294,3 @@ def test_basic_col_stats_fast_path_matches_exact(spark, tables):
         assert f.sum_val == pytest.approx(e.sum_val, rel=1e-9)
         assert f.mean_val == pytest.approx(e.mean_val, abs=2e-6)
         assert f.stddev_val == pytest.approx(e.stddev_val, abs=2e-4)
-
-
-def test_basic_col_stats_widths_bit_identical(spark, tables):
-    """Domain-fitted operand widths are a pure performance knob: the
-    narrowed decimal chain must produce BIT-IDENTICAL rows to the
-    wide default (2-decimal data is exact at any scale >= 2)."""
-    from hillview_spark.operators import stats
-
-    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    widths = {"l_quantity": (6, 2), "l_extendedprice": (8, 2),
-              "l_discount": (4, 2), "l_tax": (4, 2)}
-    li = tables["lineitem"]
-    wide = sorted(map(tuple, stats.basic_col_stats(li, cols).collect()))
-    narrow = sorted(
-        map(tuple, stats.basic_col_stats(li, cols, widths=widths).collect())
-    )
-    assert wide == narrow

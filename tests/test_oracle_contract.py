@@ -96,7 +96,7 @@ FROZEN = {
     "operators.temporal.range_join": {'by_cols': None, 'bucket_seconds': 3600},
     "operators.temporal.moving_aggregate": {'key_col': 'user_id', 'ts_col': 'ts', 'value_col': 'value', 'tiebreak_col': 'event_id', 'n_preceding': 3, 'chunk_seconds': None, 'strict': True},
     "operators.stats.quantiles": {'ndigits': 4},
-    "operators.stats.basic_col_stats": {'ndigits': 4, 'exact': True, 'widths': None},
+    "operators.stats.basic_col_stats": {'ndigits': 4, 'exact': True},
     "operators.stats.distinct_values": {'limit': 1000},
     "operators.histogram.histogram1d": {'buckets': 40},
     "operators.histogram.cdf": {'buckets': 100},

@@ -1,5 +1,6 @@
 """Deployment profiles (r16, VERDICT-r15 #5): the production scale
-settings live in code, the local default stays bench-comparable."""
+settings live in code, the local default stays comparable with the
+numbers recorded in OPTIMIZATION_r15/r16.md."""
 
 import pytest
 
@@ -7,14 +8,14 @@ from hillview_spark.session import PROFILES, get_spark
 
 
 def test_local_profile_adds_nothing():
-    # the driver bench must run the exact same session confs as
-    # every previous round — "local" is required to be a no-op
+    # local runs must use the exact same session confs as every
+    # recorded measurement — "local" is required to be a no-op
     assert PROFILES["local"] == {}
 
 
 def test_production_profile_pins_documented_values():
     p = PROFILES["production"]
-    # measured r15 (tools/ab_aqe_r15.py): the 100-TB coalescing
+    # measured r15 (OPTIMIZATION_r15.md): the 100-TB coalescing
     # policy — and the reason it must NOT leak into local defaults
     assert (
         p["spark.sql.adaptive.coalescePartitions.parallelismFirst"]

@@ -1,14 +1,11 @@
-"""Dump .explain('formatted') for every bench query (and optionally
-every declared queries() key) into $SPARK_GRAFT_PLANS_DIR (default
-plans/r16/) as <name>_<tag>.txt.
+"""Dump .explain('formatted') for every declared queries() key at
+sf0.01 into $SPARK_GRAFT_PLANS_DIR (default plans/r16/) as
+gate_<name>_<tag>.txt.
 
-Usage: python tools/dump_plans.py <tag> [--gate] [only_name ...]
+Usage: python tools/dump_plans.py <tag> [only_name ...]
 
-<tag> is 'before' or 'after'. Without --gate, dumps the bench.py
-headline queries at sf0.1 (the perf surface this round optimizes);
-with --gate, dumps the declared queries() at sf0.01 instead.
-Explain never executes the plan, so this is safe to run while other
-work occupies the box.
+<tag> is 'before' or 'after'. Explain never executes the plan, so
+this is safe to run while other work occupies the box.
 """
 
 from __future__ import annotations
@@ -29,49 +26,27 @@ def plan_text(df) -> str:
 
 def main():
     tag = sys.argv[1]
-    gate = "--gate" in sys.argv[2:]
-    only = set(a for a in sys.argv[2:] if not a.startswith("--"))
+    only = set(sys.argv[2:])
     os.makedirs(OUT, exist_ok=True)
 
+    import __spark_entry__ as entry_mod
+    from hillview_spark import cache
     from hillview_spark.session import get_spark
 
-    if gate:
-        import __spark_entry__ as entry_mod
-        from hillview_spark import cache
-
-        spark = get_spark(master="local[8]", shuffle_partitions=8)
-        spark.sparkContext.setLogLevel("ERROR")
-        sf_dir = "/root/testdata/sf0.01"
-        for name, fn in entry_mod.queries().items():
-            if only and name not in only:
-                continue
-            try:
-                txt = plan_text(fn(spark, sf_dir))
-            except Exception as e:  # a plan we cannot build is itself a finding
-                txt = f"EXPLAIN FAILED: {e}"
-            with open(f"{OUT}/gate_{name}_{tag}.txt", "w") as f:
-                f.write(txt)
-            cache.release_all()
-            print(name)
-    else:
-        import bench
-        from hillview_spark import cache
-        from hillview_spark.tables import load_all
-
-        spark = get_spark(master="local[8]", shuffle_partitions=8)
-        spark.sparkContext.setLogLevel("ERROR")
-        t = load_all(spark, "/root/testdata/sf0.1")
-        for name, (factory, _how) in bench.headline_queries(t).items():
-            if only and name not in only:
-                continue
-            try:
-                txt = plan_text(factory())
-            except Exception as e:
-                txt = f"EXPLAIN FAILED: {e}"
-            with open(f"{OUT}/{name}_{tag}.txt", "w") as f:
-                f.write(txt)
-            cache.release_all()
-            print(name)
+    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir = "/root/testdata/sf0.01"
+    for name, fn in entry_mod.queries().items():
+        if only and name not in only:
+            continue
+        try:
+            txt = plan_text(fn(spark, sf_dir))
+        except Exception as e:  # a plan we cannot build is itself a finding
+            txt = f"EXPLAIN FAILED: {e}"
+        with open(f"{OUT}/gate_{name}_{tag}.txt", "w") as f:
+            f.write(txt)
+        cache.release_all()
+        print(name)
     spark.stop()
 
 
