@@ -90,7 +90,6 @@ def _dp_session_view(lineitem: DataFrame):
     col, lo, hi = _DP_SESSION_FILTER
     pv = api.PrivateTableView(
         api.TableView(lineitem), _dp_session_schema(), seed=_DP_SESSION_SEED,
-        prf="md5str",
     )
     return pv.filter_range(col, lo, hi)
 
@@ -408,18 +407,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["logs_parse_syslog"] = _logs_parse_syslog
 
     # --- differential privacy (binary mechanism) ---------------------
-    # md5str PRF since r7 (VERDICT directive #1): the oracle
-    # re-derives every Laplace draw inside DuckDB instead of taking
-    # Python-computed noise literals.
+    # The oracle re-derives every Laplace draw inside DuckDB from the
+    # md5 tree-node key instead of taking Python-computed noise
+    # literals.
     q["dp_histogram_quantity"] = lambda s, d: privacy.dp_histogram(
         _t(s, d, "lineitem"), "l_quantity",
         lo=1.0, hi=51.0, granularity=1.0, epsilon=1.0, buckets=10, seed=7,
-        prf="md5str",
     )
     q["dp_cdf_quantity"] = lambda s, d: privacy.dp_histogram(
         _t(s, d, "lineitem"), "l_quantity",
         lo=1.0, hi=51.0, granularity=1.0, epsilon=1.0, buckets=10, seed=7,
-        cdf=True, prf="md5str",
+        cdf=True,
     )
     # rows+schema oracle (r6): driver-side iterative optimization
     # (the brief's non-SQL-expressible category) — the oracle pins
@@ -502,12 +500,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             max_windows=20, key_col="event_id", salt="bound1",
         )
     )
-    # hash-oracled since r6: with the engine-portable md5str PRF the
+    # hash-oracled since r6: with the engine-portable md5 PRF the
     # whole Chan-Song-Shi release — hour leaf, base-20 digit
     # decomposition of the prefix, per-node draw, ordered noise sum —
     # is re-derived in DuckDB SQL and hash-checked.
     q["dp_prefix_counts"] = lambda s, d: ev.dp_prefix_counts(
-        _t(s, d, "events"), epsilon=1.0, seed=7, prf="md5str"
+        _t(s, d, "events"), epsilon=1.0, seed=7
     )
     # continual HISTOGRAM release (r6): per-window value-bucket cells
     # under the same portable cell noise; streaming twin tested
@@ -524,24 +522,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # distinct index; the standalone gate calls must too).
     q["dp_histogram_mktsegment"] = lambda s, d: privacy.dp_histogram_string(
         _t(s, d, "customer"), "c_mktsegment", _SEGMENTS, epsilon=1.0, seed=7,
-        column_index=1, prf="md5str",
+        column_index=1,
     )
     q["dp_count_lineitem"] = lambda s, d: privacy.dp_count(
-        _t(s, d, "lineitem"), epsilon=1.0, seed=7, prf="md5str"
+        _t(s, d, "lineitem"), epsilon=1.0, seed=7
     )
     # r12: the bounded-sum/mean mechanisms — clip bounds chosen so
     # clipping actually bites on the fixture (quantity spans 1..50,
     # value exceeds 250), exercising the clamp path, not just the sum
     q["dp_sum_quantity"] = lambda s, d: privacy.dp_sum(
         _t(s, d, "lineitem"), "l_quantity", lo=5.0, hi=40.0,
-        epsilon=1.0, seed=7, prf="md5str"
+        epsilon=1.0, seed=7
     )
     q["dp_mean_value"] = lambda s, d: privacy.dp_mean(
         _t(s, d, "events"), "value", lo=0.0, hi=250.0,
-        epsilon=1.0, seed=7, prf="md5str"
+        epsilon=1.0, seed=7
     )
     q["dp_distinct_custkey"] = lambda s, d: privacy.dp_distinct_count(
-        _t(s, d, "orders"), "o_custkey", epsilon=1.0, seed=7, prf="md5str"
+        _t(s, d, "orders"), "o_custkey", epsilon=1.0, seed=7
     )
     # r13 (late block — leads r14 with decontaminate_spans): the
     # stability histogram over an UNKNOWN domain — which user ids are
@@ -551,23 +549,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # genuinely drops values at both fixtures.
     q["dp_active_users"] = lambda s, d: privacy.dp_histogram_unknown_domain(
         _t(s, d, "events"), "user_id", epsilon=1.0, delta=1e-14, seed=7,
-        prf="md5",
     )
     q["dp_next_k_rows"] = lambda s, d: privacy.dp_next_k(
         _t(s, d, "lineitem"),
         ["l_returnflag", "l_linestatus", "l_quantity"],
-        epsilon=1.0, k=20, seed=7, prf="md5str",
+        epsilon=1.0, k=20, seed=7,
     )
     q["dp_quantiles_quantity"] = lambda s, d: privacy.dp_quantiles(
         _t(s, d, "lineitem"), "l_quantity",
         lo=1.0, hi=51.0, granularity=1.0, epsilon=1.0,
-        probs=[0.25, 0.5, 0.75, 0.95], buckets=10, seed=7, prf="md5str",
+        probs=[0.25, 0.5, 0.75, 0.95], buckets=10, seed=7,
     )
     q["dp_heatmap_qty_discount"] = lambda s, d: privacy.dp_heatmap(
         _t(s, d, "lineitem"), "l_quantity", "l_discount",
         xlo=1.0, xhi=51.0, xgranularity=1.0,
         ylo=0.0, yhi=0.11, ygranularity=0.01,
-        epsilon=1.0, xbuckets=5, ybuckets=4, seed=7, prf="md5str",
+        epsilon=1.0, xbuckets=5, ybuckets=4, seed=7,
     )
     # the composed private SESSION a DPWrapper user actually runs:
     # curator-quantized view -> range filter (fresh lineage seed) ->
@@ -1470,8 +1467,8 @@ def _kadic_spine_sql(key_cols: list[str], cells, seed: int, ci: int,
     in DuckDB SQL (VERDICT-r6 directive #1): the only embedded
     literals are the DATA-INDEPENDENT k-adic node coordinates (pure
     interval arithmetic from the curator grid — privacy.
-    kadic_decomposition), never a noise value. Each draw's uniform is
-    the md5str PRF (privacy._uniform: first 13 hex digits of
+    kadic_decomposition), never a noise value. Each draw's uniform comes
+    from the md5 tree-node key (privacy._uniform: first 13 hex digits of
     md5('seed|ci|a:s|...')), clamped and pushed through the
     SecureLaplace inverse CDF, and per-cell draws sum via
     list_sum(list(... ORDER BY ord)) — a sequential fold in node
@@ -1516,7 +1513,7 @@ def _kadic_spine_sql(key_cols: list[str], cells, seed: int, ci: int,
 
 def _count_noise_sql(seed: int, ci: int, epsilon: float,
                      special: int = -1) -> str:
-    """Scalar SQL expression for ONE md5str count-noise draw
+    """Scalar SQL expression for ONE md5 count-noise draw
     (privacy.count_noise: node (special, 0), scale 1/epsilon) —
     re-derived in-engine, not injected as a Python literal."""
     return _scaled_noise_sql(seed, ci, 1.0 / epsilon, special)
@@ -2520,7 +2517,7 @@ def oracle_sql() -> dict[str, str]:
         FROM lines
     """
 
-    # DP histograms (md5str gate variants since r7): the oracle
+    # DP histograms: the oracle
     # embeds only the DATA-INDEPENDENT k-adic node COORDINATES of
     # each bucket's interval — the noise itself (PRF draw, inverse
     # CDF, ordered sum) is re-derived inside DuckDB by
@@ -2873,7 +2870,7 @@ def oracle_sql() -> dict[str, str]:
 
     o["dp_histogram_mktsegment"] = _dp_string_sql()
 
-    # count-query draws: re-derived in SQL from the md5str special
+    # count-query draws: re-derived in SQL from the md5 special
     # buckets (-1 = TotalCount, -3 = DistinctCount) — zero literals
     _cnt_noise_sql = _count_noise_sql(7, 0, 1.0, special=-1)
     o["dp_count_lineitem"] = f"""
@@ -5038,11 +5035,11 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # dp_prefix_counts: full SQL re-derivation of the continual
-    # counter (streaming/events.py:dp_prefix_counts, prf='md5str').
+    # counter (streaming/events.py:dp_prefix_counts).
     # leaf = hours-since-epoch + 2^19; the k-adic (k=20) decomposition
     # of the prefix [0, leaf+1) is the BASE-20 DIGIT expansion of
     # n = leaf+1 (greedy largest-aligned-block = digit blocks), one
-    # md5str draw per node ('seed|type_index|start:size'), noise
+    # md5 draw per node ('seed|type_index|start:size'), noise
     # summed in node order (size desc, start asc) to match the Python
     # spine's sequential sum; scale = ceil(log20 2^20)/eps = 5.0.
     # (The n==20 k-unit-leaves special case can't occur: leaves sit

@@ -236,16 +236,11 @@ class PrivateTableView:
     filters still derive views — quantization composes under
     Catalyst like any other projection."""
 
-    def __init__(self, view: TableView, schema, seed: int = 0,
-                 prf: str = "sha256"):
+    def __init__(self, view: TableView, schema, seed: int = 0):
         from hillview_spark.operators.privacy import private_view
 
         self.schema = schema
         self.seed = seed
-        # PRF for every noise draw in this session: 'sha256' (house
-        # default) or 'md5str' (engine-portable — lets an external
-        # auditor/oracle re-derive the session's noise spine in SQL)
-        self.prf = prf
         self.df = private_view(view.df, schema)
         # stable per-column PRF index, as the reference indexes noise
         # by column position in the privacy schema
@@ -260,9 +255,8 @@ class PrivateTableView:
         name hash for columns outside the schema — two unlisted
         columns must never share a draw (index-0 fallback would let
         their releases subtract to an exactly-denoised difference).
-        The fallback stays strictly below 2^31 - the hash range is
-        reduced so position + hash can't overflow the PRF's signed
-        32-bit index field."""
+        The fallback stays strictly below 2^31 (fallback_index), so
+        every index is a signed 32-bit value."""
         if col in self._col_index:
             return self._col_index[col]
         return fallback_index(col, len(self._col_index))
@@ -283,7 +277,6 @@ class PrivateTableView:
     def _derive(self, df, desc: str) -> "PrivateTableView":
         out = object.__new__(PrivateTableView)
         out.schema, out.seed, out.df = self.schema, self.seed, df
-        out.prf = self.prf
         out._col_index = self._col_index
         out._lineage = self._lineage + (desc,)
         return out
@@ -301,7 +294,7 @@ class PrivateTableView:
         return _priv.dp_histogram(
             self.df, col, q.global_min, q.global_max, q.granularity,
             self.schema.epsilon(col), buckets, self._seed(),
-            self._col_index[col], cdf, prf=self.prf,
+            self._col_index[col], cdf,
         )
 
     def histogram_string(self, col: str, buckets: int | None = None) -> DataFrame:
@@ -310,7 +303,7 @@ class PrivateTableView:
         q = self.schema.quantization[col]
         return _priv.dp_histogram_string(
             self.df, col, q.left_boundaries, self.schema.epsilon(col),
-            buckets, self._seed(), self._col_index[col], prf=self.prf,
+            buckets, self._seed(), self._col_index[col],
             # r10 review: the curator's globalMax was forwarded on the
             # schema-direct path (r9 fix) but still dropped HERE, so
             # the session path counted above-ceiling rows into the
@@ -331,7 +324,7 @@ class PrivateTableView:
             qx.global_min, qx.global_max, qx.granularity,
             qy.global_min, qy.global_max, qy.granularity,
             self.schema.epsilon(xcol, ycol), xb, yb, self._seed(),
-            self._col_index[xcol], self._col_index[ycol], prf=self.prf,
+            self._col_index[xcol], self._col_index[ycol],
         )
 
     def quantiles(self, col: str, probs: list[float], buckets: int = 40) -> DataFrame:
@@ -341,20 +334,19 @@ class PrivateTableView:
         return _priv.dp_quantiles(
             self.df, col, q.global_min, q.global_max, q.granularity,
             self.schema.epsilon(col), probs, buckets, self._seed(),
-            self._col_index[col], prf=self.prf,
+            self._col_index[col],
         )
 
     def count(self, epsilon: float = 1.0) -> DataFrame:
         from hillview_spark.operators import privacy as _priv
 
-        return _priv.dp_count(self.df, epsilon, self._seed(), prf=self.prf)
+        return _priv.dp_count(self.df, epsilon, self._seed())
 
     def distinct_count(self, col: str, epsilon: float = 1.0) -> DataFrame:
         from hillview_spark.operators import privacy as _priv
 
         return _priv.dp_distinct_count(
-            self.df, col, epsilon, self._seed(), self._index_of(col),
-            prf=self.prf,
+            self.df, col, epsilon, self._seed(), self._index_of(col)
         )
 
     def page(self, sort_cols: list[str], epsilon: float = 1.0, k: int = 20,
@@ -364,5 +356,5 @@ class PrivateTableView:
 
         return _priv.dp_next_k(
             self.df, sort_cols, epsilon, k, ascending, start, self._seed(),
-            self._index_of(",".join(sort_cols)), prf=self.prf,
+            self._index_of(",".join(sort_cols)),
         )

@@ -25,14 +25,27 @@ the driver as O(buckets x log_b(leaves)) PRF draws and joined in as a
 broadcast literal spine. At 100 TB nothing changes: the scan
 dominates and the noise stays O(buckets).
 
-Determinism: SHA-256 PRF over (seed, column_index, node intervals)
--> 53-bit uniform -> inverse-CDF Laplace (the same transform as
-SecureLaplace.uniformToLaplace). Same numbers on every engine and
-every run, so DP results hash-oracle cross-engine. Deviation from
-the reference: instead of Monte-Carlo confidence intervals
-(PrivacyUtils.laplaceCI samples 10k draws), we publish the exact
-analytic noise variance n_intervals * 2 * scale^2 per bucket —
-deterministic, and sufficient to reconstruct any CI.
+Determinism: every draw is one keyed PRF — the first 13 hex digits
+of an md5 key as a 52-bit uniform, pushed through the inverse-CDF
+Laplace of SecureLaplace.uniformToLaplace. The key is a plain string,
+so any engine with md5 re-derives the draw (the DuckDB gate oracle
+does). It has two formats:
+- tree-node key (_uniform): 'seed|column_index|a:s|a:s|...', one
+  'start:size' segment per k-adic node (two for a heatmap node pair,
+  after the '-1:column_index_y' segment), and 'special:0' for the
+  whole-table special buckets (SPECIAL_*). Driver-side draws: the binary
+  mechanism's noise spine, count/sum/mean draws, the continual
+  counter.
+- cell key (laplace_noise_col): concat_ws('|', fields..., seed), each
+  field escaped by _prf_field. Catalyst draws on an unbounded key
+  domain: the windowed releases, next-K pages, the unknown-domain
+  histogram.
+Secrecy rests on the seed: md5's collision weakness does not reveal a
+draw without it. Every release rounds half-up to an integer
+(noisy_round). Deviation from the reference: instead of Monte-Carlo
+confidence intervals (PrivacyUtils.laplaceCI samples 10k draws), we
+publish the exact analytic noise variance n_intervals * 2 * scale^2
+per bucket — deterministic, and sufficient to reconstruct any CI.
 """
 
 from __future__ import annotations
@@ -40,7 +53,6 @@ from __future__ import annotations
 import hashlib
 import json
 import math
-import struct
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -130,6 +142,7 @@ def noise_scale(epsilon: float, *leaf_counts: int, k: int = BRANCHING_FACTOR) ->
     """Laplace scale for a (possibly multi-dimensional) k-adic tree:
     product over dimensions of ceil(log_k leaves), divided by epsilon
     (PrivacyUtils.computeNoiseScale, PrivacyUtils.java:18-27)."""
+    _check_epsilon(epsilon)
     scale = 1.0
     for t in leaf_counts:
         scale *= max(1, _ceil_log(t, k))
@@ -151,32 +164,16 @@ def _check_epsilon(epsilon: float) -> None:
         raise ValueError(f"epsilon must be > 0, got {epsilon!r}")
 
 
-def _uniform(
-    seed: int, column_index: int, *nodes: tuple[int, int], prf: str = "sha256"
-) -> float:
-    """Deterministic uniform in [0, 1) from a keyed PRF over
-    (seed, column index, node intervals) — the same
-    keyed-PRF-per-tree-node construction as SecureLaplace.sampleUniform
-    (SecureLaplace.java:42-60; AES there — any PRF works, the privacy
-    argument only needs pseudorandomness + a secret seed).
-
-    prf='sha256' (default): 53-bit uniform from SHA-256 over the
-    binary-packed key — the house default for driver-spine mechanisms
-    whose noise is embedded as literals in oracles.
-    prf='md5str': 52-bit uniform from the first 13 hex digits of
-    md5('seed|index|a:s|a:s|...') — ENGINE-PORTABLE (the same recipe
-    as laplace_noise_col's md5 path): any engine with md5 can rebuild
-    the draw from the node list alone, which is what lets the DP
-    continual counter's O(log T) per-release noise be re-derived and
-    hash-checked in DuckDB SQL rather than trusted as a literal."""
-    if prf == "md5str":
-        key = f"{seed}|{column_index}|" + "|".join(f"{a}:{s}" for a, s in nodes)
-        return int(hashlib.md5(key.encode()).hexdigest()[:13], 16) * 2.0**-52
-    h = hashlib.sha256()
-    h.update(struct.pack(">qi", seed, column_index))
-    for a, s in nodes:
-        h.update(struct.pack(">qq", a, s))
-    return (int.from_bytes(h.digest()[:8], "big") >> 11) * 2.0**-53
+def _uniform(seed: int, column_index: int, *nodes: tuple[int, int]) -> float:
+    """Deterministic uniform in [0, 1) from the tree-node key (module
+    docstring) — the same keyed-PRF-per-tree-node construction as
+    SecureLaplace.sampleUniform (SecureLaplace.java:42-60; AES there —
+    any PRF works, the privacy argument only needs pseudorandomness +
+    a secret seed). Any engine with md5 rebuilds the draw from the
+    node list alone, so the oracles re-derive it in SQL rather than
+    trusting a literal."""
+    key = f"{seed}|{column_index}|" + "|".join(f"{a}:{s}" for a, s in nodes)
+    return int(hashlib.md5(key.encode()).hexdigest()[:13], 16) * 2.0**-52
 
 
 def laplace_from_uniform(scale: float, unif: float) -> float:
@@ -191,17 +188,22 @@ def laplace_from_uniform(scale: float, unif: float) -> float:
     return scale * math.log(1.0 - 2.0 * r)
 
 
+def noisy_round(value, noise) -> F.Column:
+    """THE release policy of every DP mechanism: floor(value + noise
+    + 0.5) as a long — Math.round, as Converters.toLong rounds the
+    reference's noisy counts (DPHistogram.java:108). `noise` is a
+    Column or a driver-side float. The integer release absorbs the
+    <=1-ulp drift of log() across math libraries (JVM Math.log vs
+    DuckDB LN), which is what lets the oracles hash-check releases;
+    sub-unit precision is pure noise at every scale used here."""
+    return F.floor(value.cast("double") + noise + F.lit(0.5)).cast("long")
+
+
 def node_noise(
-    seed: int,
-    column_index: int,
-    scale: float,
-    *nodes: tuple[int, int],
-    prf: str = "sha256",
+    seed: int, column_index: int, scale: float, *nodes: tuple[int, int]
 ) -> float:
     """Noise for one tree node (or one node-pair in 2-D)."""
-    return laplace_from_uniform(
-        scale, _uniform(seed, column_index, *nodes, prf=prf)
-    )
+    return laplace_from_uniform(scale, _uniform(seed, column_index, *nodes))
 
 
 def interval_noise(
@@ -211,7 +213,6 @@ def interval_noise(
     seed: int,
     column_index: int = 0,
     k: int = BRANCHING_FACTOR,
-    prf: str = "sha256",
 ) -> tuple[float, int]:
     """Total noise for the leaf interval [left, right): sum of one
     independent draw per covering k-adic node (DPHistogram.
@@ -219,15 +220,15 @@ def interval_noise(
     Summation runs in kadic_decomposition's enumeration order —
     ASCENDING START, with sizes ascending to the largest aligned node
     then descending (for a CDF prefix [0, r) that happens to be
-    ascending size throughout) — and the engine-portable prf='md5str'
-    oracle must sum in the SAME order for bit-parity (r10: this note
-    previously claimed descending-size order, which only holds for
-    left = 0 prefixes — an oracle author size-sorting the draws would
-    diverge in the last ulps on non-CDF buckets)."""
+    ascending size throughout) — and an oracle must sum in the SAME
+    order for bit-parity (r10: this note previously claimed
+    descending-size order, which only holds for left = 0 prefixes —
+    an oracle author size-sorting the draws would diverge in the last
+    ulps on non-CDF buckets)."""
     total = 0.0
     nodes = kadic_decomposition(left, right, k)
     for node in nodes:
-        total += node_noise(seed, column_index, scale, node, prf=prf)
+        total += node_noise(seed, column_index, scale, node)
     return total, len(nodes)
 
 
@@ -303,7 +304,6 @@ def dp_histogram(
     column_index: int = 0,
     cdf: bool = False,
     k: int = BRANCHING_FACTOR,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Noisy histogram (or CDF) of `col` under the binary mechanism.
 
@@ -317,15 +317,7 @@ def dp_histogram(
 
     Output: (bucket, left_edge, noisy_count, n_intervals, variance)
     — dense, one row per bucket. Exact counts never leave the plan.
-
-    prf='md5str' switches every per-node draw to the engine-portable
-    md5-over-string PRF (_uniform's md5str mode, the same recipe the
-    DP continual counter uses) so an external engine — or the DuckDB
-    gate oracle — can re-derive the whole noise spine from the
-    (data-independent) node list alone instead of trusting
-    Python-computed noise literals.
     """
-    _check_epsilon(epsilon)
     leaves = max(1, math.ceil((hi - lo) / granularity))
     buckets = min(buckets, leaves)
     scale = noise_scale(epsilon, leaves, k=k)
@@ -335,7 +327,7 @@ def dp_histogram(
     spine = []  # (bucket, left_edge, noise, n_intervals, variance)
     for i, (l, r) in enumerate(ranges):
         nl, nr = (0, r) if cdf else (l, r)
-        noise, n = interval_noise(nl, nr, scale, seed, column_index, k, prf=prf)
+        noise, n = interval_noise(nl, nr, scale, seed, column_index, k)
         spine.append((i, float(lo + l * granularity), noise, n, n * base_var))
     spark = df.sparkSession
     # JVM-literal spine (r15 opt): createDataFrame planned the 10-100
@@ -382,8 +374,7 @@ def dp_histogram(
     if cdf:
         w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
         dense = dense.withColumn("cnt", F.sum("cnt").over(w))
-    # Math.round = floor(x + 0.5): Converters.toLong in DPHistogram.java:108
-    noisy = F.floor(F.col("cnt").cast("double") + F.col("noise") + F.lit(0.5)).cast("long")
+    noisy = noisy_round(F.col("cnt"), F.col("noise"))
     out = dense.select(
         "bucket", "left_edge", noisy.alias("noisy_count"), "n_intervals", "variance"
     ).orderBy("bucket")
@@ -411,7 +402,6 @@ def dp_quantiles(
     seed: int = 0,
     column_index: int = 0,
     k: int = BRANCHING_FACTOR,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Private quantiles by inverting the noisy CDF — the estimate the
     reference's private views read off the DPHistogram CDF rendering
@@ -442,10 +432,9 @@ def dp_quantiles(
     left edge, computed driver-side with the identical float
     expression the spine row uses — so the plan embeds exactly one
     scan."""
-    _check_epsilon(epsilon)
     cdf = dp_histogram(
         df, col, lo, hi, granularity, epsilon, buckets, seed, column_index,
-        cdf=True, k=k, prf=prf,
+        cdf=True, k=k,
     ).select("bucket", "left_edge", "noisy_count")
     spark = df.sparkSession
     from hillview_spark.localrel import local_df
@@ -489,7 +478,6 @@ def dp_heatmap(
     column_index: int = 0,
     column_index_y: int = 0,
     k: int = BRANCHING_FACTOR,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Noisy 2-D histogram: noise per cell is one draw per PAIR of
     k-adic nodes (x-node, y-node) covering the cell's leaf rectangle,
@@ -511,7 +499,6 @@ def dp_heatmap(
     the fold existed to prevent. A real k-adic node always has
     start >= 0, so the sentinel can never collide with an interval;
     the oracles' md5 keys carry the same '-1:ciy|' prefix."""
-    _check_epsilon(epsilon)
     xleaves = max(1, math.ceil((xhi - xlo) / xgranularity))
     yleaves = max(1, math.ceil((yhi - ylo) / ygranularity))
     xbuckets, ybuckets = min(xbuckets, xleaves), min(ybuckets, yleaves)
@@ -530,7 +517,7 @@ def dp_heatmap(
                 for yn in ynodes:
                     noise += node_noise(
                         seed, column_index, scale,
-                        (-1, column_index_y), xn, yn, prf=prf,
+                        (-1, column_index_y), xn, yn,
                     )
             n = len(xnodes) * len(ynodes)
             spine.append((i, j, noise, n, n * base_var))
@@ -565,9 +552,7 @@ def dp_heatmap(
         .groupBy("xbucket", "ybucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    noisy = F.floor(
-        F.coalesce(F.col("cnt"), F.lit(0)).cast("double") + F.col("noise") + F.lit(0.5)
-    ).cast("long")
+    noisy = noisy_round(F.coalesce(F.col("cnt"), F.lit(0)), F.col("noise"))
     return (
         F.broadcast(noise_df)
         .join(counts, ["xbucket", "ybucket"], "left")
@@ -635,14 +620,8 @@ def _prf_field(c) -> F.Column:
     place) and a value containing '|' could forge another cell's key
     — either way two DISTINCT cells could share one Laplace draw,
     which breaks the per-cell parallel-composition argument.
-    Identity on non-NULL values without '|' or '\\' — under prf='md5'
-    (which always hashed strings) such releases (and their DuckDB
-    oracle twins, which apply the same REPLACE/COALESCE) are
-    bit-unchanged. The xxhash64 path previously hashed NATIVE column
-    types; routing it through escaped strings changed every
-    xxhash64-keyed draw under the same seed — an intentional
-    hardening side effect (engine-internal noise only; no oracle ever
-    keyed on xxhash64)."""
+    Identity on non-NULL values without '|' or '\\', and the DuckDB
+    oracle twins apply the same REPLACE/COALESCE."""
     s = c.cast("string")
     esc = F.replace(
         F.replace(s, F.lit("\\"), F.lit("\\\\")), F.lit("|"), F.lit("\\|")
@@ -655,51 +634,35 @@ def laplace_noise_col(
     seed: int,
     *key_cols,
     scale: float | None = None,
-    prf: str = "xxhash64",
 ):
     """Laplace(scale) noise as a PURE CATALYST expression: a uniform
-    from a keyed PRF over (*key_cols, seed) followed by the same
-    inverse-CDF transform as SecureLaplace.uniformToLaplace
-    (SecureLaplace.java:62-69). Whole-stage-codegen'd JVM arithmetic —
-    no Python in the loop — and, unlike the driver-spine mechanism in
-    dp_histogram, computable row-by-row on an UNBOUNDED key domain,
-    which is what a streaming release needs (the noise for a window
-    must be derivable when the window closes, without enumerating
-    windows in advance). The uniform clamps to
-    [2^-53, 1 - 2^-53] so log(0) can't surface at u = 0.
+    from the cell key over (*key_cols, seed) (module docstring)
+    followed by the same inverse-CDF transform as
+    SecureLaplace.uniformToLaplace (SecureLaplace.java:62-69).
+    Whole-stage-codegen'd JVM arithmetic — no Python in the loop —
+    and, unlike the driver-spine mechanism in dp_histogram, computable
+    row-by-row on an UNBOUNDED key domain, which is what a streaming
+    release needs (the noise for a window must be derivable when the
+    window closes, without enumerating windows in advance). The
+    uniform clamps to [2^-53, 1 - 2^-53] so log(0) can't surface at
+    u = 0.
     Default scale is 1/epsilon (one draw per disjoint cell: parallel
     composition gives epsilon-DP when every event lands in exactly
     one cell).
 
-    prf='xxhash64' (default): 53-bit uniform from Spark's native
-    xxhash64 — fastest, but engine-specific (no DuckDB twin).
-    prf='md5': 52-bit uniform from the first 13 hex digits of
-    md5(concat_ws('|', key_cols..., seed)) — PORTABLE: any engine
-    with md5 + hex-to-int reproduces the UNIFORM bit-for-bit; the
-    final log() is within 1 ulp across math libraries (JVM Math.log
-    vs libm), which an integer release absorbs in its floor() — so
-    a release keyed this way can be audited (and hash-oracle-checked)
-    outside Spark. Callers must cast key cols to canonical strings
-    themselves (e.g. epoch seconds, not engine-formatted timestamps).
+    Any engine with md5 + hex-to-int reproduces the UNIFORM
+    bit-for-bit; the final log() is within 1 ulp across math
+    libraries, which noisy_round absorbs — so a release keyed this
+    way can be audited (and hash-oracle-checked) outside Spark.
+    Callers must cast key cols to canonical strings themselves (e.g.
+    epoch seconds, not engine-formatted timestamps).
     """
+    _check_epsilon(epsilon)
     if scale is None:
         scale = 1.0 / epsilon
-    if prf == "md5":
-        key = F.concat_ws(
-            "|", *[_prf_field(c) for c in key_cols], F.lit(str(seed))
-        )
-        u52 = F.conv(F.substring(F.md5(key), 1, 13), 16, 10).cast("bigint")
-        u = u52.cast("double") * F.lit(2.0**-52)
-    elif prf == "xxhash64":
-        # same escaped-string canonicalization as md5: xxhash64 also
-        # skips NULL arguments, which would let (NULL, x) and (x,)
-        # cells collide on one draw
-        u53 = F.shiftrightunsigned(
-            F.xxhash64(*[_prf_field(c) for c in key_cols], F.lit(seed)), 11
-        )
-        u = u53.cast("double") * F.lit(2.0**-53)
-    else:
-        raise ValueError("prf must be 'xxhash64' or 'md5'")
+    key = F.concat_ws("|", *[_prf_field(c) for c in key_cols], F.lit(str(seed)))
+    u52 = F.conv(F.substring(F.md5(key), 1, 13), 16, 10).cast("bigint")
+    u = u52.cast("double") * F.lit(2.0**-52)
     u = F.least(F.greatest(u, F.lit(2.0**-53)), F.lit(1.0 - 2.0**-53))
     r = F.lit(0.5) - u
     return F.when(
@@ -732,14 +695,12 @@ def count_noise(
     seed: int,
     column_index: int = 0,
     special: int = SPECIAL_TOTAL_COUNT,
-    prf: str = "sha256",
 ) -> float:
     """One Laplace(1/epsilon) draw for a whole-table count query,
     seeded by a special negative bucket index so it never collides
     with a tree node (DPWrapper.computeCountNoise,
-    DPWrapper.java:187-205). prf='md5str' keys the draw on
-    md5('seed|ci|special:0') — re-derivable by any engine."""
-    return node_noise(seed, column_index, 1.0 / epsilon, (special, 0), prf=prf)
+    DPWrapper.java:187-205): the tree-node key 'seed|ci|special:0'."""
+    return node_noise(seed, column_index, 1.0 / epsilon, (special, 0))
 
 
 def dp_count(
@@ -747,18 +708,15 @@ def dp_count(
     epsilon: float,
     seed: int = 0,
     column_index: int = 0,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Noisy total row count (DPWrapper.getTableMetadata,
     DPWrapper.java:167-174): COUNT(*) + Laplace(1/epsilon), rounded
     half-up, with the analytic noise variance alongside."""
     _check_epsilon(epsilon)
-    noise = count_noise(epsilon, seed, column_index, prf=prf)
+    noise = count_noise(epsilon, seed, column_index)
     var = laplace_variance(1.0 / epsilon)
     return df.agg(
-        F.floor(F.count(F.lit(1)).cast("double") + F.lit(noise) + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_rows"),
+        noisy_round(F.count(F.lit(1)), noise).alias("noisy_rows"),
         F.lit(var).alias("variance"),
     )
 
@@ -769,7 +727,6 @@ def dp_distinct_count(
     epsilon: float,
     seed: int = 0,
     column_index: int = 0,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Noisy distinct count — NoisyHLogLog (sketches/results/
     NoisyHLogLog.java:12-25): the distinct-count estimate plus one
@@ -779,15 +736,27 @@ def dp_distinct_count(
     swap in distinct_count_approx for the sketch at extreme
     cardinalities)."""
     _check_epsilon(epsilon)
-    noise = count_noise(
-        epsilon, seed, column_index, SPECIAL_DISTINCT_COUNT, prf=prf
-    )
+    noise = count_noise(epsilon, seed, column_index, SPECIAL_DISTINCT_COUNT)
     return df.agg(
-        F.floor(F.countDistinct(col).cast("double") + F.lit(noise) + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_distinct"),
+        noisy_round(F.countDistinct(col), noise).alias("noisy_distinct"),
         F.lit(laplace_variance(1.0 / epsilon)).alias("variance"),
     )
+
+
+def _clipped_sum(col: str, lo: float, hi: float) -> F.Column:
+    """Sum of `col` with every present, finite value clipped to
+    [lo, hi] and NULL / non-finite rows contributing 0 — the bounded
+    aggregate of dp_sum and dp_mean. The DECIMAL(20,6) cast before the
+    sum keeps it order-independent (the cross-engine float rule)."""
+    if not (hi > lo):
+        raise ValueError(f"need hi > lo, got [{lo!r}, {hi!r}]")
+    c = F.col(col)
+    clipped = F.when(
+        c.isNotNull() & numeric.finite_pred(c),
+        F.least(F.greatest(c.cast("double"), F.lit(float(lo))),
+                F.lit(float(hi))),
+    ).otherwise(F.lit(0.0))
+    return F.coalesce(F.sum(clipped.cast("decimal(20,6)")), F.lit(0))
 
 
 def dp_sum(
@@ -798,7 +767,6 @@ def dp_sum(
     epsilon: float,
     seed: int = 0,
     column_index: int = 0,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Noisy bounded sum — the classic clipped-contribution Laplace
     mechanism the reference's bucket list stops short of (its
@@ -825,26 +793,13 @@ def dp_sum(
     Scale: one Tungsten aggregate, map-side combined; the noise is a
     driver-computed literal (data-independent), so the plan is a
     single scan + single-partition final sum at ANY data size."""
-    if not (hi > lo):
-        raise ValueError(f"need hi > lo, got [{lo!r}, {hi!r}]")
+    total = _clipped_sum(col, lo, hi)
     _check_epsilon(epsilon)
     sens = max(abs(float(lo)), abs(float(hi)))
     scale = sens / epsilon
-    noise = node_noise(seed, column_index, scale, (SPECIAL_SUM, 0), prf=prf)
-    c = F.col(col)
-    clipped = F.when(
-        c.isNotNull() & numeric.finite_pred(c),
-        F.least(F.greatest(c.cast("double"), F.lit(float(lo))),
-                F.lit(float(hi))),
-    ).otherwise(F.lit(0.0))
+    noise = node_noise(seed, column_index, scale, (SPECIAL_SUM, 0))
     return df.agg(
-        F.floor(
-            F.coalesce(
-                F.sum(clipped.cast("decimal(20,6)")), F.lit(0)
-            ).cast("double")
-            + F.lit(noise)
-            + F.lit(0.5)
-        ).cast("long").alias("noisy_sum"),
+        noisy_round(total, noise).alias("noisy_sum"),
         F.lit(laplace_variance(scale)).alias("variance"),
     )
 
@@ -857,7 +812,6 @@ def dp_mean(
     epsilon: float,
     seed: int = 0,
     column_index: int = 0,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Noisy bounded mean via the standard ratio composition: half
     the budget to the clipped sum, half to the row count, released
@@ -879,34 +833,15 @@ def dp_mean(
     the honest "too small to release" signal, rather than a division
     blow-up). Both components ship alongside so a dashboard can
     re-derive or re-round."""
-    if not (hi > lo):
-        raise ValueError(f"need hi > lo, got [{lo!r}, {hi!r}]")
+    total = _clipped_sum(col, lo, hi)
     _check_epsilon(epsilon)
     half = epsilon / 2.0
     sens = max(abs(float(lo)), abs(float(hi)))
-    sum_noise = node_noise(
-        seed, column_index, sens / half, (SPECIAL_MEAN_SUM, 0), prf=prf
-    )
-    cnt_noise = count_noise(
-        half, seed, column_index, special=SPECIAL_MEAN_COUNT, prf=prf
-    )
-    c = F.col(col)
-    clipped = F.when(
-        c.isNotNull() & numeric.finite_pred(c),
-        F.least(F.greatest(c.cast("double"), F.lit(float(lo))),
-                F.lit(float(hi))),
-    ).otherwise(F.lit(0.0))
+    sum_noise = node_noise(seed, column_index, sens / half, (SPECIAL_MEAN_SUM, 0))
+    cnt_noise = count_noise(half, seed, column_index, special=SPECIAL_MEAN_COUNT)
     agg = df.agg(
-        F.floor(
-            F.coalesce(
-                F.sum(clipped.cast("decimal(20,6)")), F.lit(0)
-            ).cast("double")
-            + F.lit(sum_noise)
-            + F.lit(0.5)
-        ).cast("long").alias("noisy_sum"),
-        F.floor(
-            F.count(F.lit(1)).cast("double") + F.lit(cnt_noise) + F.lit(0.5)
-        ).cast("long").alias("noisy_count"),
+        noisy_round(total, sum_noise).alias("noisy_sum"),
+        noisy_round(F.count(F.lit(1)), cnt_noise).alias("noisy_count"),
     )
     return agg.select(
         "noisy_sum",
@@ -928,7 +863,6 @@ def dp_next_k(
     start: tuple | None = None,
     seed: int = 0,
     column_index: int = 0,
-    prf: str = "sha256",
 ) -> DataFrame:
     """Private spreadsheet page — NextKSketchNoisy (sketches/results/
     NextKSketchNoisy.java:11-29): the next-K distinct sort keys with
@@ -970,13 +904,11 @@ def dp_next_k(
         seed,
         *[canonical_grid_col(F.col(c), dtypes.get(c)) for c in sort_cols],
         F.lit(column_index),
-        prf="md5",
     )
     page = page.withColumn(
-        "noisy_cnt",
-        F.floor(F.col("cnt").cast("double") + noise + F.lit(0.5)).cast("long"),
+        "noisy_cnt", noisy_round(F.col("cnt"), noise)
     ).drop("cnt")
-    scanned = dp_count(df, epsilon, seed, column_index, prf=prf).select(
+    scanned = dp_count(df, epsilon, seed, column_index).select(
         F.col("noisy_rows").alias("noisy_rows_scanned")
     )
     return page.crossJoin(F.broadcast(scanned))
@@ -991,7 +923,6 @@ def dp_histogram_string(
     seed: int = 0,
     column_index: int = 0,
     k: int = BRANCHING_FACTOR,
-    prf: str = "sha256",
     global_max: str | None = None,
 ) -> DataFrame:
     """Noisy histogram of a string column quantized on a left-boundary
@@ -1007,7 +938,6 @@ def dp_histogram_string(
     returns -1 and GroupBySketch drops it — and, when the curator's
     explicit `global_max` is given, values strictly above it are
     excluded too (value == global_max stays in the last leaf)."""
-    _check_epsilon(epsilon)
     bs = sorted(left_boundaries)
     leaves = len(bs)
     # explicit None check (r10): `buckets or leaves` silently turned
@@ -1020,7 +950,7 @@ def dp_histogram_string(
 
     spine = []
     for i, (l, r) in enumerate(ranges):
-        noise, n = interval_noise(l, r, scale, seed, column_index, k, prf=prf)
+        noise, n = interval_noise(l, r, scale, seed, column_index, k)
         spine.append((i, bs[l], noise, n, n * base_var))
     # JVM-literal spine — see dp_histogram (r15 opt)
     from hillview_spark.localrel import local_df
@@ -1053,9 +983,7 @@ def dp_histogram_string(
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    noisy = F.floor(
-        F.coalesce(F.col("cnt"), F.lit(0)).cast("double") + F.col("noise") + F.lit(0.5)
-    ).cast("long")
+    noisy = noisy_round(F.coalesce(F.col("cnt"), F.lit(0)), F.col("noise"))
     return (
         F.broadcast(noise_df)
         .join(counts, "bucket", "left")
@@ -1187,7 +1115,6 @@ def dp_histogram_from_schema(
     column_index: int = 0,
     cdf: bool = False,
     k: int = BRANCHING_FACTOR,
-    prf: str = "sha256",
 ) -> DataFrame:
     """dp_histogram with the grid + budget taken from the curator's
     PrivacySchema — the DPWrapper wiring (web/src/main/java/org/
@@ -1213,7 +1140,6 @@ def dp_histogram_from_schema(
             seed=seed,
             column_index=column_index,
             k=k,
-            prf=prf,
             # r9 review: the curator's globalMax was parsed but never
             # forwarded — rows above the declared grid ceiling counted
             # into the last bucket instead of being excluded
@@ -1231,10 +1157,6 @@ def dp_histogram_from_schema(
         column_index=column_index,
         cdf=cdf,
         k=k,
-        # prf/k passthrough (r10): the schema-driven convenience path
-        # could not produce the engine-portable md5str spine every
-        # underlying mechanism supports
-        prf=prf,
     )
 
 
@@ -1244,7 +1166,6 @@ def dp_histogram_unknown_domain(
     epsilon: float,
     delta: float,
     seed: int = 0,
-    prf: str = "md5",
 ) -> DataFrame:
     """Stability-based histogram over an UNKNOWN domain — the
     (epsilon, delta)-DP thresholded release (Korolova-Kenthapadi-
@@ -1301,14 +1222,8 @@ def dp_histogram_unknown_domain(
     counts = df.where(c.isNotNull()).groupBy(c.alias("value")).agg(
         F.count(F.lit(1)).alias("__cnt")
     )
-    noise = laplace_noise_col(
-        epsilon, seed, F.col("value"), F.lit("udom"),
-        scale=1.0 / epsilon, prf=prf,
-    )
-    noisy = (
-        F.floor(F.col("__cnt").cast("double") + noise + F.lit(0.5))
-        .cast("long")
-    )
+    noise = laplace_noise_col(epsilon, seed, F.col("value"), F.lit("udom"))
+    noisy = noisy_round(F.col("__cnt"), noise)
     return (
         counts.select("value", noisy.alias("noisy_count"))
         .where(F.col("noisy_count") > F.lit(tau))

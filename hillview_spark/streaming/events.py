@@ -340,13 +340,13 @@ def _noisy_counts(
     per-cell draw — subtracting them would reveal the exact count
     delta the cap removed, noise-free (the SPECIAL_MEAN_SUM /
     'wmsum'-vs-'wmcnt' collision class)."""
-    noise = _cell_noise(epsilon, seed, tag)
+    from hillview_spark.operators.privacy import noisy_round
+
+    noise = _cell_noise(epsilon, seed, tag, "window_start", "event_type")
     return counts.select(
         "window_start",
         "event_type",
-        F.floor(F.col("n_events").cast("double") + noise + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_events"),
+        noisy_round(F.col("n_events"), noise).alias("noisy_events"),
     )
 
 
@@ -461,20 +461,16 @@ def _noisy_sums(
     sensitivity/epsilon with sensitivity max(|lo|, |hi|), keyed under
     the 'wsum' domain tag so this release never shares a draw with
     the 'wcounts'/'whist' mechanisms at the same seed."""
-    from hillview_spark.operators.privacy import laplace_noise_col
+    from hillview_spark.operators.privacy import noisy_round
 
-    sens = max(abs(float(lo)), abs(float(hi)))
-    secs = F.unix_seconds(F.col("window_start").cast("timestamp"))
-    noise = laplace_noise_col(
-        epsilon, seed, secs, F.col("event_type"), F.lit("wsum"),
-        scale=sens / epsilon, prf="md5",
+    noise = _cell_noise(
+        epsilon, seed, "wsum", "window_start", "event_type",
+        sensitivity=max(abs(float(lo)), abs(float(hi))),
     )
     return sums.select(
         "window_start",
         "event_type",
-        F.floor(F.col("sum_clipped") + noise + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_sum"),
+        noisy_round(F.col("sum_clipped"), noise).alias("noisy_sum"),
     )
 
 
@@ -577,28 +573,20 @@ def _noisy_means(
     Laplace(2 * sensitivity / epsilon) under 'wmsum', the count half
     at Laplace(2 / epsilon) under 'wmcnt' — each mechanism's own
     domain tags, never shared with 'wsum'/'wcounts'/'whist'."""
-    from hillview_spark.operators.privacy import laplace_noise_col
+    from hillview_spark.operators.privacy import _check_epsilon, noisy_round
 
+    _check_epsilon(epsilon)  # report the caller's epsilon, not its half
     half = epsilon / 2.0
-    sens = max(abs(float(lo)), abs(float(hi)))
-    secs = F.unix_seconds(F.col("window_start").cast("timestamp"))
-    sum_noise = laplace_noise_col(
-        epsilon, seed, secs, F.col("event_type"), F.lit("wmsum"),
-        scale=sens / half, prf="md5",
+    sum_noise = _cell_noise(
+        half, seed, "wmsum", "window_start", "event_type",
+        sensitivity=max(abs(float(lo)), abs(float(hi))),
     )
-    cnt_noise = laplace_noise_col(
-        epsilon, seed, secs, F.col("event_type"), F.lit("wmcnt"),
-        scale=1.0 / half, prf="md5",
-    )
+    cnt_noise = _cell_noise(half, seed, "wmcnt", "window_start", "event_type")
     return cells.select(
         "window_start",
         "event_type",
-        F.floor(F.col("sum_clipped") + sum_noise + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_sum"),
-        F.floor(F.col("n_events").cast("double") + cnt_noise + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_count"),
+        noisy_round(F.col("sum_clipped"), sum_noise).alias("noisy_sum"),
+        noisy_round(F.col("n_events"), cnt_noise).alias("noisy_count"),
     ).withColumn(
         "noisy_mean",
         F.when(
@@ -669,19 +657,13 @@ def _noisy_distinct(cells: DataFrame, epsilon: float, seed: int) -> DataFrame:
     streaming twins (the _noisy_counts discipline), keyed under the
     'wdist' domain tag so no draw is shared with the other windowed
     mechanisms at one seed."""
-    from hillview_spark.operators.privacy import laplace_noise_col
+    from hillview_spark.operators.privacy import noisy_round
 
-    secs = F.unix_seconds(F.col("window_start").cast("timestamp"))
-    noise = laplace_noise_col(
-        epsilon, seed, secs, F.col("event_type"), F.lit("wdist"),
-        scale=1.0 / epsilon, prf="md5",
-    )
+    noise = _cell_noise(epsilon, seed, "wdist", "window_start", "event_type")
     return cells.select(
         "window_start",
         "event_type",
-        F.floor(F.col("n_distinct").cast("double") + noise + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_distinct"),
+        noisy_round(F.col("n_distinct"), noise).alias("noisy_distinct"),
     )
 
 
@@ -806,21 +788,15 @@ def _noisy_trending(
     dp_histogram_unknown_domain argument)."""
     import math
 
-    from hillview_spark.operators.privacy import laplace_noise_col
+    from hillview_spark.operators.privacy import noisy_round
 
+    noise = _cell_noise(epsilon, seed, tag, "window_start", "value")
     tau = 1.0 + 2.0 * math.log(2.0 / delta) / epsilon + 0.5
-    secs = F.unix_seconds(F.col("window_start").cast("timestamp"))
-    noise = laplace_noise_col(
-        epsilon, seed, secs, F.col("value"), F.lit(tag),
-        scale=1.0 / epsilon, prf="md5",
-    )
     return (
         cells.select(
             "window_start",
             "value",
-            F.floor(F.col("n_events").cast("double") + noise + F.lit(0.5))
-            .cast("long")
-            .alias("noisy_count"),
+            noisy_round(F.col("n_events"), noise).alias("noisy_count"),
         )
         .where(F.col("noisy_count") > F.lit(tau))
     )
@@ -1342,20 +1318,15 @@ def dp_transition_counts(
     rebuild the release bit-for-bit (floor absorbs the 1-ulp ln).
     Sparse convention as every count release: cells with zero true
     transitions produce no row."""
-    from hillview_spark.operators.privacy import laplace_noise_col
+    from hillview_spark.operators.privacy import noisy_round
 
-    counts = transition_counts(events)
-    noise = laplace_noise_col(
-        epsilon, seed,
-        F.col("from_type"), F.col("to_type"), F.lit("wtrans"),
-        prf="md5", scale=3.0 / epsilon,
+    noise = _cell_noise(
+        epsilon, seed, "wtrans", "from_type", "to_type", sensitivity=3.0
     )
-    return counts.select(
+    return transition_counts(events).select(
         "from_type",
         "to_type",
-        F.floor(
-            F.col("n_transitions").cast("double") + noise + F.lit(0.5)
-        ).cast("long").alias("noisy_transitions"),
+        noisy_round(F.col("n_transitions"), noise).alias("noisy_transitions"),
     )
 
 
@@ -1493,47 +1464,47 @@ def _noisy_hist(counts: DataFrame, epsilon: float, seed: int) -> DataFrame:
     """ONE noisy-release select shared by the histogram twins (the
     dp_windowed_counts pattern: a single copy of the rounding and
     the cell-noise expression keeps the twins bit-identical)."""
-    from hillview_spark.operators.privacy import laplace_noise_col
+    from hillview_spark.operators.privacy import noisy_round
 
-    secs = F.unix_seconds(F.col("window_start").cast("timestamp"))
     # 'whist' is the mechanism DOMAIN TAG: dp_windowed_counts keys on
     # (secs, event_type) and this release on (secs, bucket) under the
     # same seed — without the tag an event_type that stringifies like
     # a bucket index ('0'..'9') would draw bit-identical noise in both
     # releases, and subtracting them would cancel it exactly.
-    noise = laplace_noise_col(
-        epsilon, seed, secs, F.col("bucket"), F.lit("whist"), prf="md5"
-    )
+    noise = _cell_noise(epsilon, seed, "whist", "window_start", "bucket")
     return counts.select(
         "window_start",
         "bucket",
-        F.floor(F.col("n_events").cast("double") + noise + F.lit(0.5))
-        .cast("long")
-        .alias("noisy_events"),
+        noisy_round(F.col("n_events"), noise).alias("noisy_events"),
     )
 
 
-def _cell_noise(epsilon: float, seed: int, tag: str = "wcounts"):
-    """Per-(window, type) Laplace draw for the continual release,
-    keyed on the PORTABLE md5 PRF over (epoch seconds, event_type):
-    identical in the batch and streaming twins (window_start is NTZ
-    in batch, LTZ in the stream; the session TZ is pinned UTC so the
-    epoch-seconds cast is the same instant either way), and
-    reproducible in any engine with md5: the uniform is bit-exact,
-    the log within 1 ulp, and the floor()'d integer release
-    identical — which is what lets the DuckDB oracle hash-check the
-    noisy counts."""
-    from hillview_spark.operators.privacy import laplace_noise_col
+def _cell_noise(
+    epsilon: float, seed: int, tag: str, *keys: str, sensitivity: float = 1.0
+):
+    """THE Laplace(sensitivity/epsilon) draw of every cell-keyed
+    release in this module (the windowed family and the transition
+    matrix): privacy.laplace_noise_col over the cell key
+    (keys..., tag), `keys` being column names. window_start enters as
+    its epoch seconds — NTZ in batch, LTZ in the stream, the same
+    instant under the pinned UTC session — so the batch and streaming
+    twins and the DuckDB oracle hash the same string.
 
-    secs = F.unix_seconds(F.col("window_start").cast("timestamp"))
-    # tag = mechanism domain tag ('wcounts' for the event-level
-    # release, 'uwcnt' for the contribution-bounded one; see
-    # _noisy_hist's 'whist'): distinct windowed releases must never
-    # share a PRF key even when an event_type stringifies like a
-    # bucket index — and the capped/uncapped pair must never share a
-    # draw at one seed (_noisy_counts' docstring).
+    `tag` is the mechanism's domain tag ('wcounts', 'uwcnt', 'whist',
+    'wsum', ...): distinct releases must never share a PRF key even
+    when a key value stringifies like another release's (an
+    event_type '3' vs value bucket 3), and a capped/uncapped pair
+    must never share a draw at one seed (_noisy_counts' docstring)."""
+    from hillview_spark.operators.privacy import _check_epsilon, laplace_noise_col
+
+    _check_epsilon(epsilon)
+    fields = [
+        F.unix_seconds(F.col(k).cast("timestamp"))
+        if k == "window_start" else F.col(k)
+        for k in keys
+    ]
     return laplace_noise_col(
-        epsilon, seed, secs, F.col("event_type"), F.lit(tag), prf="md5"
+        epsilon, seed, *fields, F.lit(tag), scale=sensitivity / epsilon
     )
 
 
@@ -1584,7 +1555,6 @@ def dp_prefix_counts(
     events: DataFrame,
     epsilon: float = 1.0,
     seed: int = 0,
-    prf: str = "sha256",
 ) -> DataFrame:
     """DP continual counter, batch twin — THE construction of Chan,
     Song, Shi TISSEC '11 (the paper IntervalDecomposition.java:29-31
@@ -1595,13 +1565,9 @@ def dp_prefix_counts(
     hours since epoch (data-independent), horizon fixed at 2^20
     leaves. One groupBy shuffle for the per-window counts; the
     prefix sum + noise run on the O(windows x types) aggregate via a
-    driver spine, like dp_histogram.
-
-    prf='md5str' switches the per-node draw to the engine-portable
-    md5-over-string PRF (privacy._uniform) — same construction, a
-    PRF any engine can replay, which is what lets the DuckDB oracle
-    re-derive the whole O(log T) release from SQL and hash-check it.
-    The streaming twin takes the same flag; keep them identical."""
+    driver spine, like dp_histogram. Each node draw uses the
+    tree-node key (privacy._uniform), which the DuckDB oracle replays
+    to re-derive the whole O(log T) release from SQL."""
     from hillview_spark.operators.privacy import noise_scale
 
     scale = noise_scale(epsilon, CONTINUAL_HORIZON_LEAVES)
@@ -1642,7 +1608,7 @@ def dp_prefix_counts(
     # Consecutive-hour prefixes [0, L+1) share almost all of their
     # k-adic nodes (only the lowest digits churn), so memoizing the
     # per-node draw collapses the spine from O(rows * log T) PRF
-    # calls to O(distinct nodes) — ~80x fewer md5/sha256 evaluations
+    # calls to O(distinct nodes) — ~80x fewer md5 evaluations
     # on an hourly spine, same released values bit-for-bit.
     #
     # DRIVER SPINE BOUND (r10): the collected memo was the one
@@ -1654,7 +1620,7 @@ def dp_prefix_counts(
     # a per-partition memo, values bit-for-bit identical, and the
     # spine joins un-broadcast (it no longer fits a broadcast).
     from hillview_spark.operators.privacy import (
-        kadic_decomposition, node_noise,
+        kadic_decomposition, node_noise, noisy_round,
     )
 
     def _prefix_noise(leaf: int, ci: int, node_memo: dict) -> float:
@@ -1663,7 +1629,7 @@ def dp_prefix_counts(
             k = (ci, node)
             draw = node_memo.get(k)
             if draw is None:
-                draw = node_noise(seed, ci, scale, node, prf=prf)
+                draw = node_noise(seed, ci, scale, node)
                 node_memo[k] = draw
             total += draw
         return total
@@ -1725,9 +1691,7 @@ def dp_prefix_counts(
         .select(
             "event_type",
             "window_start",
-            F.floor(F.col("cum").cast("double") + F.col("noise") + F.lit(0.5))
-            .cast("long")
-            .alias("noisy_prefix"),
+            noisy_round(F.col("cum"), F.col("noise")).alias("noisy_prefix"),
         )
     )
 
@@ -1739,7 +1703,6 @@ def stream_dp_prefix_counts(
     epsilon: float = 1.0,
     seed: int = 0,
     watermark: str = "2 hours",
-    prf: str = "sha256",
 ) -> DataFrame:
     """Streaming twin of the continual counter: per event type, a
     stateful operator buffers per-hour counts and, when the event-time
@@ -1753,17 +1716,23 @@ def stream_dp_prefix_counts(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
+        DoubleType, LongType, StringType, StructField, StructType,
+        TimestampType,
     )
 
-    from hillview_spark.operators.privacy import interval_noise, noise_scale
+    from hillview_spark.operators.privacy import (
+        interval_noise, noise_scale, noisy_round,
+    )
 
     scale = noise_scale(epsilon, CONTINUAL_HORIZON_LEAVES)
+    # the state function emits the exact prefix and its noise; the
+    # release rounds them in Catalyst, as the batch twin does
     out_type = StructType(
         [
             StructField("event_type", StringType()),
             StructField("window_start", TimestampType()),
-            StructField("noisy_prefix", LongType()),
+            StructField("cum", LongType()),
+            StructField("noise", DoubleType()),
         ]
     )
     # state: (cum_emitted, open-leaf list, open-count list)
@@ -1778,21 +1747,18 @@ def stream_dp_prefix_counts(
 
     def _emit(etype, cum, open_map, horizon_leaf):
         """Release every complete hour (< horizon_leaf) in order."""
-        import math
-
         out = []
         for leaf in sorted(open_map):
             if leaf >= horizon_leaf:
                 break
             cum += open_map.pop(leaf)
-            noise, _ = interval_noise(
-                0, leaf + 1, scale, seed, _type_index(etype), prf=prf
-            )
+            noise, _ = interval_noise(0, leaf + 1, scale, seed, _type_index(etype))
             out.append(
                 (
                     etype,
                     pd.Timestamp((leaf - CONTINUAL_LEAF_OFFSET) * HOUR_US, unit="us"),
-                    math.floor(cum + noise + 0.5),  # same rounding as batch
+                    cum,
+                    noise,
                 )
             )
         return cum, out
@@ -1852,7 +1818,7 @@ def stream_dp_prefix_counts(
             )
         if out:
             yield pd.DataFrame(
-                out, columns=["event_type", "window_start", "noisy_prefix"]
+                out, columns=["event_type", "window_start", "cum", "noise"]
             )
 
     stream = _event_time_stream(spark, events_dir, schema)
@@ -1862,6 +1828,11 @@ def stream_dp_prefix_counts(
         .groupBy("event_type")
         .applyInPandasWithState(
             fn, out_type, state_type, "append", GroupStateTimeout.EventTimeTimeout
+        )
+        .select(
+            "event_type",
+            "window_start",
+            noisy_round(F.col("cum"), F.col("noise")).alias("noisy_prefix"),
         )
     )
 

@@ -49,7 +49,7 @@ FROZEN = {
     "streaming.events.dp_windowed_counts": {'unit': 'hour', 'epsilon': 1.0, 'seed': 0},
     "streaming.events.dp_windowed_histogram": {'unit': 'hour', 'col': 'value', 'lo': 0.0, 'hi': 100.0, 'buckets': 10, 'epsilon': 1.0, 'seed': 0},
     "functions.curation.ngram_novelty": {'n': 3, 'min_df': 2, 'text_col': 'text', 'id_col': 'doc_id'},
-    "operators.privacy.dp_histogram_unknown_domain": {'seed': 0, 'prf': 'md5'},
+    "operators.privacy.dp_histogram_unknown_domain": {'seed': 0},
     "functions.dedup.repeated_spans": {'n': 10, 'min_sites': 2, 'id_col': 'doc_id', 'text_col': 'text'},
     "functions.dedup.remove_repeated_spans": {'n': 10, 'min_sites': 2, 'id_col': 'doc_id', 'text_col': 'text', 'keep': 'all'},
     "functions.dedup.contamination_spans": {'n': 10, 'id_col': 'doc_id', 'text_col': 'text', 'eval_id_col': None, 'eval_text_col': None, 'broadcast_eval': True},
@@ -119,15 +119,15 @@ FROZEN = {
     "operators.correlation.metric_mds": {'n_points': 100, 'low_dims': 2, 'key_col': None, 'seed': 42, 'max_iterations': 1000, 'learning_rate': 1.0, 'decay': 0.999, 'tolerance': 1e-05},
     "operators.correlation.category_centroids": {'ndigits': 4},
     "operators.correlation.pca_project": {'k': 2},
-    "operators.privacy.dp_histogram": {'buckets': 10, 'seed': 0, 'column_index': 0, 'cdf': False, 'k': 20, 'prf': 'sha256'},
-    "operators.privacy.dp_histogram_string": {'buckets': None, 'seed': 0, 'column_index': 0, 'k': 20, 'prf': 'sha256', 'global_max': None},
-    "operators.privacy.dp_count": {'seed': 0, 'column_index': 0, 'prf': 'sha256'},
-    "operators.privacy.dp_sum": {'seed': 0, 'column_index': 0, 'prf': 'sha256'},
-    "operators.privacy.dp_mean": {'seed': 0, 'column_index': 0, 'prf': 'sha256'},
-    "operators.privacy.dp_distinct_count": {'seed': 0, 'column_index': 0, 'prf': 'sha256'},
-    "operators.privacy.dp_quantiles": {'buckets': 40, 'seed': 0, 'column_index': 0, 'k': 20, 'prf': 'sha256'},
-    "operators.privacy.dp_heatmap": {'xbuckets': 10, 'ybuckets': 10, 'seed': 0, 'column_index': 0, 'column_index_y': 0, 'k': 20, 'prf': 'sha256'},
-    "operators.privacy.dp_next_k": {'k': 20, 'ascending': None, 'start': None, 'seed': 0, 'column_index': 0, 'prf': 'sha256'},
+    "operators.privacy.dp_histogram": {'buckets': 10, 'seed': 0, 'column_index': 0, 'cdf': False, 'k': 20},
+    "operators.privacy.dp_histogram_string": {'buckets': None, 'seed': 0, 'column_index': 0, 'k': 20, 'global_max': None},
+    "operators.privacy.dp_count": {'seed': 0, 'column_index': 0},
+    "operators.privacy.dp_sum": {'seed': 0, 'column_index': 0},
+    "operators.privacy.dp_mean": {'seed': 0, 'column_index': 0},
+    "operators.privacy.dp_distinct_count": {'seed': 0, 'column_index': 0},
+    "operators.privacy.dp_quantiles": {'buckets': 40, 'seed': 0, 'column_index': 0, 'k': 20},
+    "operators.privacy.dp_heatmap": {'xbuckets': 10, 'ybuckets': 10, 'seed': 0, 'column_index': 0, 'column_index_y': 0, 'k': 20},
+    "operators.privacy.dp_next_k": {'k': 20, 'ascending': None, 'start': None, 'seed': 0, 'column_index': 0},
     "operators.spreadsheet.next_k": {'k': 20, 'ascending': None, 'start': None, 'inclusive': True},
     "operators.spreadsheet.next_k_list": {'k': 20, 'ascending': None, 'start': None, 'inclusive': True},
     "operators.spreadsheet.next_k_aggregate": {'k': 20, 'ascending': None, 'start': None, 'inclusive': True},

@@ -428,7 +428,7 @@ def _events_cases():
         "dp_active_users": lambda df: __import__(
             "hillview_spark.operators.privacy", fromlist=["x"]
         ).dp_histogram_unknown_domain(
-            df, "user_id", epsilon=1.0, delta=1e-14, seed=7, prf="md5"
+            df, "user_id", epsilon=1.0, delta=1e-14, seed=7
         ),
         # r12: bounded mean — NaN/±Inf/NULL values contribute ZERO to
         # the clipped sum but still COUNT as rows, in both engines
@@ -436,7 +436,6 @@ def _events_cases():
             "hillview_spark.operators.privacy", fromlist=["x"]
         ).dp_mean(
             df, "value", lo=0.0, hi=250.0, epsilon=1.0, seed=7,
-            prf="md5str",
         ),
         # r11: session summary + normalized retention on the NULL-ts
         # / NULL-user edges (both exclude them; percentile and rate
@@ -995,7 +994,6 @@ def _li_cases():
         # and the decimal-exact aggregate + one noise add must agree
         "dp_sum_quantity": lambda df: privacy.dp_sum(
             df, "l_quantity", lo=5.0, hi=40.0, epsilon=1.0, seed=7,
-            prf="md5str",
         ),
         "histogram1d_numeric": lambda df: histogram.histogram1d(
             df, "l_extendedprice", 40
@@ -1052,13 +1050,13 @@ def _li_cases():
         ),
         "dp_histogram_quantity": lambda df: privacy.dp_histogram(
             df, "l_quantity", lo=1.0, hi=51.0, granularity=1.0,
-            epsilon=1.0, buckets=10, seed=7, prf="md5str",
+            epsilon=1.0, buckets=10, seed=7,
         ),
         "dp_heatmap_qty_discount": lambda df: privacy.dp_heatmap(
             df, "l_quantity", "l_discount",
             xlo=1.0, xhi=51.0, xgranularity=1.0,
             ylo=0.0, yhi=0.11, ygranularity=0.01,
-            epsilon=1.0, xbuckets=5, ybuckets=4, seed=7, prf="md5str",
+            epsilon=1.0, xbuckets=5, ybuckets=4, seed=7,
         ),
         # r8 (VERDICT r7 #6): the composed DP session trio and the
         # private spreadsheet page on quantization-boundary + NULL +
@@ -1079,7 +1077,7 @@ def _li_cases():
         ).dp_next_k(
             df,
             ["l_returnflag", "l_linestatus", "l_quantity"],
-            epsilon=1.0, k=20, seed=7, prf="md5str",
+            epsilon=1.0, k=20, seed=7,
         ),
         "next_k_rows": lambda df: spreadsheet.next_k(
             df, ["l_returnflag", "l_linestatus", "l_quantity"], k=20
@@ -1468,10 +1466,10 @@ def _empty_cases():
         ),
         "dp_histogram_quantity": lambda d: privacy.dp_histogram(
             d["lineitem"], "l_quantity", lo=1.0, hi=51.0, granularity=1.0,
-            epsilon=1.0, buckets=10, seed=7, prf="md5str",
+            epsilon=1.0, buckets=10, seed=7,
         ),
         "dp_count_lineitem": lambda d: privacy.dp_count(
-            d["lineitem"], epsilon=1.0, seed=7, prf="md5str"
+            d["lineitem"], epsilon=1.0, seed=7
         ),
     }
 

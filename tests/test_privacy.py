@@ -190,7 +190,7 @@ def test_laplace_noise_col_deterministic_linear_centered(spark):
 
 
 def test_laplace_noise_col_md5_prf_portable(spark):
-    """The md5 PRF path matches a from-scratch Python replica of the
+    """The default call matches a from-scratch Python replica of the
     published recipe (13 hex digits -> 52-bit uniform -> inverse
     CDF) — the property the DuckDB oracle for dp_windowed_counts
     relies on cross-engine. The uniform is bit-exact everywhere; the
@@ -205,23 +205,63 @@ def test_laplace_noise_col_md5_prf_portable(spark):
     got = [
         r.x
         for r in df.select(
-            P.laplace_noise_col(1.0, 5, F.col("id"), prf="md5").alias("x")
+            P.laplace_noise_col(1.0, 5, F.col("id")).alias("x")
         ).collect()
     ]
     for i, x in enumerate(got):
         u = int(hashlib.md5(f"{i}|5".encode()).hexdigest()[:13], 16) * 2.0**-52
         u = min(max(u, 2.0**-53), 1.0 - 2.0**-53)
         assert x == pytest.approx(P.laplace_from_uniform(1.0, u), rel=1e-12)
-    # same (key, seed) under the two PRFs gives independent draws
-    xx = [
-        r.x
-        for r in df.select(
-            P.laplace_noise_col(1.0, 5, F.col("id")).alias("x")
-        ).collect()
-    ]
-    assert got != xx
-    with pytest.raises(ValueError, match="prf"):
-        P.laplace_noise_col(1.0, 5, F.col("id"), prf="sha1")
+
+
+def _md5_draw(key: str, scale: float) -> float:
+    """Hand-computed tree-node draw: first 13 hex digits of md5(key)
+    as a 52-bit uniform, through the inverse-CDF Laplace."""
+    import hashlib
+
+    u = int(hashlib.md5(key.encode()).hexdigest()[:13], 16) * 2.0**-52
+    return P.laplace_from_uniform(scale, u)
+
+
+def test_default_releases_use_the_md5_recipe(spark, tables):
+    """Called with library defaults — no recipe argument anywhere —
+    dp_count and a private session's histogram release exactly the
+    md5 tree-node key draws ('seed|ci|a:s'), the recipe the DuckDB
+    oracles re-derive."""
+    from pyspark.sql import functions as F
+
+    from hillview_spark.api import PrivateTableView, TableView
+
+    li = tables["lineitem"]
+    row = P.dp_count(li, 1.0, seed=13).first()
+    assert row.noisy_rows == math.floor(
+        li.count() + _md5_draw("13|0|-1:0", 1.0) + 0.5
+    )
+
+    ps = P.PrivacySchema.from_json(
+        """{"quantization": {"quantization": {
+            "l_quantity": {"type": "DoubleColumnQuantization",
+              "granularity": 1, "globalMin": 1, "globalMax": 51}}}}"""
+    )
+    got = {
+        r.bucket: r.noisy_count
+        for r in PrivateTableView(TableView(li), ps, seed=5)
+        .histogram("l_quantity", buckets=10)
+        .collect()
+    }
+    # 50 unit leaves, 10 buckets of 5 leaves, scale ceil(log20 50) = 2
+    exact = {
+        r.b: r.n
+        for r in li.groupBy(
+            ((F.col("l_quantity").cast("int") - 1) / 5).cast("int").alias("b")
+        ).count().withColumnRenamed("count", "n").collect()
+    }
+    assert sorted(got) == list(range(10))
+    for b in range(10):
+        noise = 0.0
+        for a, size in P.kadic_decomposition(5 * b, 5 * b + 5):
+            noise += _md5_draw(f"5|0|{a}:{size}", 2.0)
+        assert got[b] == math.floor(exact.get(b, 0) + noise + 0.5)
 
 
 def test_dp_windowed_counts_is_noised_batch(spark, tables):
@@ -700,7 +740,7 @@ def test_index_of_fallback_fits_int32(spark, tables):
     for name in ("o_comment", "weird column", "x" * 200):
         idx = pv._index_of(name)
         assert 0 < idx < 2**31
-    # struct.pack path accepts the fallback index
+    # the tree-node key accepts the fallback index
     P._uniform(1, pv._index_of("o_comment"), (0, 1))
 
 
@@ -724,9 +764,7 @@ def test_prf_field_escaping_cross_engine(spark):
     got = [
         r.x
         for r in df.select(
-            P.laplace_noise_col(
-                1.0, 5, F.col("k1"), F.col("k2"), prf="md5"
-            ).alias("x")
+            P.laplace_noise_col(1.0, 5, F.col("k1"), F.col("k2")).alias("x")
         ).collect()
     ]
     # (a) all seven cells draw distinct noise
@@ -819,7 +857,7 @@ def test_dp_windowed_counts_null_ts_and_type_match_oracle(spark):
 
 
 def test_md5str_uniform_recipe_is_pinned():
-    """The md5str PRF key format ('seed|ci|a:s' for 1-D nodes,
+    """The tree-node key format ('seed|ci|a:s' for 1-D nodes,
     'seed|ci|xa:xs|ya:ys' for heatmap node pairs) is what every
     SQL-re-derived oracle rebuilds — pin it against a hand-computed
     md5 so a format drift in _uniform breaks HERE, not as a cryptic
@@ -831,19 +869,17 @@ def test_md5str_uniform_recipe_is_pinned():
     for nodes in [((40, 5),), ((0, 20), (3, 1))]:
         key = f"7|3|" + "|".join(f"{a}:{s}" for a, s in nodes)
         want = int(hashlib.md5(key.encode()).hexdigest()[:13], 16) * 2.0**-52
-        got = priv._uniform(7, 3, *nodes, prf="md5str")
+        got = priv._uniform(7, 3, *nodes)
         assert got == want
     # distinct column indexes → distinct trees (the gate relies on
     # this to keep c_mktsegment's draws off l_quantity's tree)
-    assert priv._uniform(7, 0, (0, 1), prf="md5str") != priv._uniform(
-        7, 1, (0, 1), prf="md5str"
-    )
+    assert priv._uniform(7, 0, (0, 1)) != priv._uniform(7, 1, (0, 1))
 
 
 def test_dp_oracles_have_no_noise_literals():
     """VERDICT-r6 directive #1 regression guard: every binary-
     mechanism gate oracle re-derives its Laplace noise inside DuckDB
-    SQL (md5str PRF via _kadic_spine_sql/_count_noise_sql). The entry
+    SQL (md5 PRF via _kadic_spine_sql/_count_noise_sql). The entry
     module must therefore never call the Python noise constructors —
     a reintroduced noise literal would make the gate re-trust the
     code it checks."""
@@ -884,7 +920,7 @@ def test_dp_prefix_counts_null_type_matches_oracle(spark):
     )
     got = {
         (r.event_type, r.window_start): r.noisy_prefix
-        for r in ev.dp_prefix_counts(df, 1.0, seed=7, prf="md5str").collect()
+        for r in ev.dp_prefix_counts(df, 1.0, seed=7).collect()
     }
     # click@h0, NULL@h0, NULL@h1 (prefix 2), view@h1 — NULL ts drops
     assert len(got) == 4 and (None, base) in got
@@ -990,26 +1026,22 @@ def test_dp_next_k_double_key_rendering_contract(spark):
         [("N", 10.0), ("N", 0.001), ("A", 9999999.0)],
         "k string, v double",
     )
-    rows = P.dp_next_k(ok, ["k", "v"], epsilon=1.0, k=5, seed=7,
-                       prf="md5str").collect()
+    rows = P.dp_next_k(ok, ["k", "v"], epsilon=1.0, k=5, seed=7).collect()
     assert len(rows) == 3  # boundary grid points render identically
 
     import pyspark.errors as pe
 
     bad = spark.createDataFrame([("N", 1e-7)], "k string, v double")
     with pytest.raises(pe.PySparkException, match="renders differently"):
-        P.dp_next_k(bad, ["k", "v"], epsilon=1.0, k=5, seed=7,
-                    prf="md5str").collect()
+        P.dp_next_k(bad, ["k", "v"], epsilon=1.0, k=5, seed=7).collect()
     big = spark.createDataFrame([("N", 1e7)], "k string, v double")
     with pytest.raises(pe.PySparkException, match="renders differently"):
-        P.dp_next_k(big, ["k", "v"], epsilon=1.0, k=5, seed=7,
-                    prf="md5str").collect()
+        P.dp_next_k(big, ["k", "v"], epsilon=1.0, k=5, seed=7).collect()
     # -0.0 and 0.0 are the SAME grid point: one group, one draw
     z = spark.createDataFrame(
         [("N", -0.0), ("N", 0.0)], "k string, v double"
     )
-    zr = P.dp_next_k(z, ["k", "v"], epsilon=1.0, k=5, seed=7,
-                     prf="md5str").collect()
+    zr = P.dp_next_k(z, ["k", "v"], epsilon=1.0, k=5, seed=7).collect()
     assert len(zr) == 1 and zr[0].v == 0.0
 
 
@@ -1380,3 +1412,50 @@ def test_epsilon_guard_covers_the_whole_dp_family(spark):
         for bad in (0.0, -1.0):
             with pytest.raises(ValueError, match="epsilon"):
                 call(bad)
+
+
+_EVENT_RELEASES = {
+    "dp_windowed_counts": lambda ev, df, e: ev.dp_windowed_counts(df, epsilon=e),
+    "dp_windowed_sum": lambda ev, df, e: ev.dp_windowed_sum(df, epsilon=e),
+    "dp_windowed_mean": lambda ev, df, e: ev.dp_windowed_mean(df, epsilon=e),
+    "dp_windowed_distinct": lambda ev, df, e: ev.dp_windowed_distinct(df, epsilon=e),
+    "dp_windowed_histogram": lambda ev, df, e: ev.dp_windowed_histogram(df, epsilon=e),
+    "dp_windowed_counts_user_level":
+        lambda ev, df, e: ev.dp_windowed_counts_user_level(df, epsilon=e),
+    "dp_transition_counts": lambda ev, df, e: ev.dp_transition_counts(df, epsilon=e),
+    "dp_prefix_counts": lambda ev, df, e: ev.dp_prefix_counts(df, epsilon=e),
+}
+_EVENT_STREAM_RELEASES = [
+    "stream_dp_windowed_counts", "stream_dp_windowed_sum",
+    "stream_dp_windowed_mean", "stream_dp_windowed_distinct",
+    "stream_dp_windowed_histogram", "stream_dp_prefix_counts",
+]
+
+
+@pytest.mark.parametrize("epsilon", [0.0, -1.0])
+@pytest.mark.parametrize(
+    "release", sorted(_EVENT_RELEASES) + _EVENT_STREAM_RELEASES
+)
+def test_event_dp_releases_reject_nonpositive_epsilon(
+    spark, tmp_path, release, epsilon
+):
+    """Every windowed / continual release and its streaming twin
+    rejects epsilon <= 0 while building the plan: epsilon = 0 used to
+    die with ZeroDivisionError and a negative epsilon released rows
+    under a flipped noise sign."""
+    import datetime as dt
+
+    from hillview_spark.streaming import events as ev
+
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 6, 1, 10), 1, "click", 1.0)],
+        "event_id long, ts timestamp, user_id long, "
+        "event_type string, value double",
+    )
+    with pytest.raises(ValueError, match="epsilon"):
+        if release in _EVENT_RELEASES:
+            _EVENT_RELEASES[release](ev, df, epsilon)
+        else:
+            getattr(ev, release)(
+                spark, str(tmp_path), df.schema, epsilon=epsilon
+            )

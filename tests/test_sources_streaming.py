@@ -428,13 +428,10 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     assert stream_pairs == batch_pairs and len(batch_pairs) > 0
 
 
-@pytest.mark.parametrize("prf", ["sha256", "md5str"])
-def test_stream_dp_prefix_counts_matches_batch(spark, tmp_path, prf):
+def test_stream_dp_prefix_counts_matches_batch(spark, tmp_path):
     """Continual counter: every hour the stream releases (watermark
     passed) must carry exactly the batch twin's noisy prefix — same
-    seeded k-adic noise, same cumulative count. Both PRF modes: the
-    reference-parity sha256 and the engine-portable md5str the gate
-    key ships with."""
+    seeded k-adic noise, same cumulative count."""
     d = str(tmp_path / "events_dir")
     os.makedirs(d)
     os.symlink(
@@ -442,11 +439,11 @@ def test_stream_dp_prefix_counts_matches_batch(spark, tmp_path, prf):
     )
     raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     sdf = ev.stream_dp_prefix_counts(
-        spark, d, raw.schema, epsilon=1.0, seed=3, prf=prf
+        spark, d, raw.schema, epsilon=1.0, seed=3
     )
     q = (
         sdf.writeStream.format("memory")
-        .queryName(f"t_dp_prefix_{prf}")
+        .queryName("t_dp_prefix")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -454,13 +451,13 @@ def test_stream_dp_prefix_counts_matches_batch(spark, tmp_path, prf):
     q.awaitTermination(180)
     streamed = {
         (r.event_type, r.window_start): r.noisy_prefix
-        for r in spark.sql(f"SELECT * FROM t_dp_prefix_{prf}").collect()
+        for r in spark.sql("SELECT * FROM t_dp_prefix").collect()
     }
     batch = {
         (r.event_type, r.window_start): r.noisy_prefix
         for r in ev.dp_prefix_counts(
             load_table(spark, "/root/testdata/sf0.001", "events"), 1.0,
-            seed=3, prf=prf,
+            seed=3,
         ).collect()
     }
     assert streamed  # watermark passed at least the early hours
@@ -586,7 +583,10 @@ def test_stream_dp_prefix_counts_restart_no_double_draw(spark, tmp_path):
     not be re-drawn with a different key."""
     import datetime as dt
     import glob
+    import math
     import shutil
+
+    from hillview_spark.operators.privacy import interval_noise, noise_scale
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
@@ -666,11 +666,23 @@ def test_stream_dp_prefix_counts_restart_no_double_draw(spark, tmp_path):
     second_life = {k for k in got if k not in first_life}
     assert any(ws >= base + dt.timedelta(hours=5) for _, ws in second_life)
     late = max(second_life, key=lambda k: k[1])
-    phase2_only = sum(
-        1 for r in rows2
-        if r[3] == late[0] and r[1] < late[1] + dt.timedelta(hours=1)
+
+    def prefix(rows):
+        return sum(
+            1 for r in rows
+            if r[3] == late[0] and r[1] < late[1] + dt.timedelta(hours=1)
+        )
+
+    # the release at the last hour is the prefix over BOTH lives plus
+    # that hour's fixed noise, not the second life's rows alone
+    leaf = (late[1] - dt.datetime(1970, 1, 1)) // dt.timedelta(hours=1)
+    noise, _ = interval_noise(
+        0, leaf + ev.CONTINUAL_LEAF_OFFSET + 1,
+        noise_scale(1.0, ev.CONTINUAL_HORIZON_LEAVES), 11,
+        ev._type_index(late[0]),
     )
-    assert batch[late] > phase2_only  # noise can't hide ~40 phase-1 rows
+    assert prefix(rows1 + rows2) > prefix(rows2)
+    assert got[late] == math.floor(prefix(rows1 + rows2) + noise + 0.5)
 
 
 def test_stream_dp_windowed_histogram_matches_batch(spark, tmp_path):
@@ -1100,7 +1112,7 @@ def test_stream_dp_windowed_mean_matches_batch(spark, tmp_path):
         *[
             laplace_noise_col(
                 1.0, 3, F.lit("3600"), F.lit("click"), F.lit(tag),
-                scale=1.0, prf="md5",
+                scale=1.0,
             ).alias(tag)
             for tag in ("wsum", "wmsum", "wmcnt")
         ]
@@ -1150,7 +1162,7 @@ def test_stream_dp_windowed_distinct_matches_batch(spark, tmp_path):
         *[
             laplace_noise_col(
                 1.0, 3, F.lit("3600"), F.lit("click"), F.lit(tag),
-                scale=1.0, prf="md5",
+                scale=1.0,
             ).alias(tag)
             for tag in ("wdist", "wcounts")
         ]
@@ -1238,7 +1250,7 @@ def test_dp_windowed_trending_threshold_and_guards(spark):
         *[
             laplace_noise_col(
                 1.0, seed, F.lit("3600"), F.lit("click"), F.lit(tag),
-                scale=1.0, prf="md5",
+                scale=1.0,
             ).alias(tag)
             for tag in ("wtrend", "wcounts", "wdist")
         ]
@@ -1405,7 +1417,7 @@ def test_dp_windowed_trending_user_level_composition(spark):
         *[
             laplace_noise_col(
                 eps, seed, F.lit("1717200000"), F.lit("pop"),
-                F.lit(tag), scale=1.0 / eps, prf="md5",
+                F.lit(tag), scale=1.0 / eps,
             ).alias(tag.replace("w", "w_"))
             for tag in ("wtrend", "uwtrend")
         ]
